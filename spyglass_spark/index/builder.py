@@ -630,9 +630,9 @@ def upsert_documents(spark: SparkSession, documents: DataFrame, index_dir: str,
 
     ``max_generations`` is the auto-merge policy (tantivy's background
     segment merge, client/local.rs:191-203): after the delta commits, the
-    two oldest generations pairwise-merge until the count is back at the
-    threshold — the ONE knob shared by the Python API, the CLI
-    (``upsert --max-generations``) and the streaming micro-batcher. Each
+    two lowest generations in part space pairwise-merge until the count
+    is back at the threshold — the ONE knob shared by the Python API, the
+    CLI (``upsert --max-generations``) and the streaming micro-batcher. Each
     merge is itself an atomic manifest commit, so a crash mid-policy
     leaves a committed, searchable index with a few extra generations."""
     m = load_manifest(index_dir)
@@ -965,7 +965,10 @@ def merge_generations(spark: SparkSession, index_dir: str,
     if len(gens) < 2:
         return m
     if gen_ids is None:
-        sel = gens[:2]  # the two oldest
+        # the two lowest in part space: a merged generation takes a new
+        # gen id but keeps the lowest offset, so the two oldest by gen id
+        # need not be neighbours
+        sel = sorted(gens, key=lambda g: g["part_offset"])[:2]
     else:
         sel = [g for g in gens if g["gen"] in set(gen_ids)]
         if len(sel) < 2:

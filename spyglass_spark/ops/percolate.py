@@ -28,11 +28,13 @@ Spark-first design (no per-doc loop, no per-query scan):
   doc-local keys — skew-free, and the documents side shuffles nothing
   larger than its own term triples.
 
-Exactness rules mirror ``SearchEngine._match_doc_meta`` (the unscored
-match-set machinery): term clauses only — a phrase Should is absorbed by
-its paired term clauses (compile_query always emits them; positions
-cannot flip a Should-UNION match), and a standalone phrase / any phrase
-under msm ≥ 2 / a phrase Must raises rather than over-matching.
+Exactness rules are ``compiler.term_match_pairs``, shared with the
+unscored match-set machinery (``SearchEngine._match_doc_meta``): term
+clauses only — a phrase Should is absorbed by its paired term clauses
+(compile_query always emits them; positions cannot flip a Should-UNION
+match), and a standalone phrase / any phrase under msm ≥ 2 / a phrase
+Must raises rather than over-matching. Extra OR-groups are rejected
+here only.
 """
 from __future__ import annotations
 
@@ -42,7 +44,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..analysis.analyzer import tokenize_arrays
-from ..query.compiler import compile_query, resolve_min_should_match
+from ..query.compiler import (compile_query, resolve_min_should_match,
+                              term_match_pairs)
 
 # field → analyzer kind, the index build's own mapping
 _TOKENIZED = (("content", "en"), ("title", "default"))
@@ -120,39 +123,20 @@ def _flatten_queries(queries) -> dict:
         if not cq.should_group:
             raise ValueError(f"percolator query {key!r} needs at least "
                              "one Should clause")
-        union_pairs = {(c.field, t) for c in cq.should_group
-                       if c.kind == "term" for t in c.terms}
-        for c in cq.should_group:
-            if c.kind == "phrase":
-                # the _match_doc_meta exactness rules, verbatim
-                if msm > 1:
-                    raise ValueError(
-                        f"percolator query {key!r}: a phrase Should "
-                        "under min_should_match >= 2 cannot be "
-                        "term-matched exactly")
-                if not any((c.field, t) in union_pairs for t in c.terms):
-                    raise ValueError(
-                        f"percolator query {key!r}: a standalone phrase "
-                        "Should cannot be term-matched exactly")
+        term_match_pairs(cq, msm, f"percolator query {key!r}")
         term_clauses = [c for c in cq.should_group if c.kind == "term"]
         for ci, c in enumerate(term_clauses):
             for t in c.terms:
                 shoulds.append((key, ci, c.field, t))
-        for grp in cq.extra_groups:
+        if cq.extra_groups:
             raise ValueError(f"percolator query {key!r}: extra OR-groups "
                              "are not supported")
         n_must_pairs = 0
         for c in cq.musts:
-            if c.kind != "term":
-                raise ValueError(f"percolator query {key!r}: a phrase "
-                                 "Must cannot be term-matched exactly")
             for t in set(c.terms):
                 musts.append((key, c.field, t))
                 n_must_pairs += 1
         for c in cq.must_nots:
-            if c.kind != "term":
-                raise ValueError(f"percolator query {key!r}: a phrase "
-                                 "MustNot cannot be term-matched exactly")
             for t in set(c.terms):
                 must_nots.append((key, c.field, t))
         for t in spec.get("exclude_tags", ()):

@@ -141,6 +141,46 @@ def resolve_min_should_match(spec, n_should: int) -> int:
     return max(0, n)
 
 
+def term_match_pairs(cq: CompiledQuery, msm: int, who: str) -> set:
+    """Exactness rules of a match set read from term postings alone (no
+    positions), shared by the unscored aggregations
+    (``SearchEngine._match_doc_meta``) and the percolator. A phrase
+    match is a SUBSET of each member term's postings, so the term-posting
+    match set is exact only when every phrase Should is absorbed by a
+    same-field term clause of the Should union (compile_query pairs each
+    phrase with its terms; a parsed standalone '"a b"' is not
+    absorbable), no phrase Should sits under min_should_match >= 2
+    (positions decide whether the clause matched), and every Must,
+    MustNot and extra-group clause is a term clause. Raises ValueError
+    naming ``who`` otherwise; returns the Should group's (field, term)
+    union."""
+    union_pairs = {(c.field, t) for c in cq.should_group
+                   if c.kind == "term" for t in c.terms}
+    for c in cq.should_group:
+        if c.kind != "phrase":
+            continue
+        if msm > 1:
+            raise ValueError(
+                f"{who}: a phrase Should under min_should_match >= 2 "
+                "cannot be term-matched exactly (positions decide whether "
+                "the clause matched); use a scored search instead")
+        if not any((c.field, t) in union_pairs for t in c.terms):
+            raise ValueError(
+                f"{who}: a standalone phrase Should cannot be term-matched "
+                "exactly (its term-posting union over-counts); use a "
+                "scored search instead")
+    for grp_name, clauses in (("extra_group", [c for g in cq.extra_groups
+                                               for c in g]),
+                              ("must", cq.musts),
+                              ("must_not", cq.must_nots)):
+        for c in clauses:
+            if c.kind != "term":
+                raise ValueError(
+                    f"{who}: a phrase {grp_name} cannot be term-matched "
+                    "exactly; use a scored search instead")
+    return union_pairs
+
+
 def _term(field: str, term: str, boost: float) -> Clause:
     return Clause("term", field, (term,), (0,), boost)
 

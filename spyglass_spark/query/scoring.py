@@ -70,6 +70,49 @@ def score_postings(tf: np.ndarray, norm_ids: np.ndarray, weight: float,
     return (np.float32(weight) * tf / (tf + norms)).astype(np.float32)
 
 
+def accumulate_scores(cand: np.ndarray, clauses, combiner: str = "sum",
+                      tie: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
+    """Combine per-clause scores onto the sorted candidate ordinals
+    ``cand`` — the one float32 accumulator of the exhaustive and the
+    WAND scorers. ``clauses`` is [(ords, scores, role)] in CLAUSE ORDER,
+    scoring clauses only (ords sorted and unique per clause).
+
+    'sum' adds every clause's score in clause order. 'dismax' first
+    folds the Should group per doc — m = max clause score, s =
+    clause-order sum, m + tie·(s − m) — then adds the other clauses in
+    clause order. Every op is float32, so the result is bitwise the
+    oracle's. Clause scores are ≥ 0, so a max seeded at 0 only counts
+    matching clauses. Returns (cand, acc) restricted to acc > 0."""
+    acc = np.zeros(cand.size, dtype=np.float32)
+    rest = clauses
+    if combiner == "dismax":
+        mx = np.zeros(cand.size, dtype=np.float32)
+        for ords, scores, role in clauses:
+            if role != "should" or ords.size == 0:
+                continue
+            pos, ok = _positions(cand, ords)
+            acc[pos[ok]] = acc[pos[ok]] + scores[ok]
+            mx[pos[ok]] = np.maximum(mx[pos[ok]], scores[ok])
+        acc = mx + np.float32(tie) * (acc - mx)
+        rest = [c for c in clauses if c[2] != "should"]
+    for ords, scores, _ in rest:
+        if ords.size == 0:
+            continue
+        pos, ok = _positions(cand, ords)
+        acc[pos[ok]] = acc[pos[ok]] + scores[ok]
+    keep = acc > 0.0
+    return cand[keep], acc[keep]
+
+
+def _positions(cand: np.ndarray, ords: np.ndarray):
+    """Index of each of ``ords`` in the sorted ``cand``, and the mask of
+    the ones present."""
+    pos = np.searchsorted(cand, ords)
+    ok = pos < cand.size
+    ok[ok] = cand[pos[ok]] == ords[ok]
+    return pos, ok
+
+
 def phrase_slop(last_token_position: int) -> int:
     """slop = clamp(last_position - 2, 0, 3) — query.rs:24-33. Positions
     include stopword holes."""

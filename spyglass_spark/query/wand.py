@@ -29,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..index.codecs import decode_block, decode_block_meta
+from .scoring import accumulate_scores
 
 
 class _ClauseData:
@@ -231,9 +232,8 @@ def _score_segments(scoring_clauses, lo_arr, hi_arr, include, exclude,
                     combiner=("sum", 0.0)):
     """Exact float32 scores for all docs in the given segments that match
     ≥1 scoring clause (and the filters). Identical score math/order to the
-    exhaustive path: accumulate per clause in clause order ('sum'), or the
-    dismax two-pass (Should max + tie·rest, then scoring Musts/extras add
-    — the same float32 op sequence as _score_partition's dismax branch)."""
+    exhaustive path: scoring.accumulate_scores, the accumulator
+    _score_partition uses too."""
     per_clause = []  # (ords, scores) restricted to the segments
     for cd in scoring_clauses:
         spec = cd.spec
@@ -282,37 +282,10 @@ def _score_segments(scoring_clauses, lo_arr, hi_arr, include, exclude,
         cand = np.setdiff1d(cand, exclude, assume_unique=True)
     if cand.size == 0:
         return cand, np.empty(0, np.float32)
-    if combiner[0] == "dismax":
-        tie = np.float32(combiner[1])
-        acc = np.zeros(cand.size, dtype=np.float32)
-        mx = np.zeros(cand.size, dtype=np.float32)
-        for (docs, scores), cd in zip(per_clause, scoring_clauses):
-            if cd.spec["role"] != "should" or docs.size == 0:
-                continue
-            pos = np.searchsorted(cand, docs)
-            ok = pos < cand.size
-            ok[ok] = cand[pos[ok]] == docs[ok]
-            acc[pos[ok]] = acc[pos[ok]] + scores[ok]
-            mx[pos[ok]] = np.maximum(mx[pos[ok]], scores[ok])
-        acc = mx + tie * (acc - mx)
-        for (docs, scores), cd in zip(per_clause, scoring_clauses):
-            if cd.spec["role"] == "should" or docs.size == 0:
-                continue
-            pos = np.searchsorted(cand, docs)
-            ok = pos < cand.size
-            ok[ok] = cand[pos[ok]] == docs[ok]
-            acc[pos[ok]] = acc[pos[ok]] + scores[ok]
-    else:
-        acc = np.zeros(cand.size, dtype=np.float32)
-        for docs, scores in per_clause:
-            if docs.size == 0:
-                continue
-            pos = np.searchsorted(cand, docs)
-            ok = pos < cand.size
-            ok[ok] = cand[pos[ok]] == docs[ok]
-            acc[pos[ok]] = acc[pos[ok]] + scores[ok]
-    keep = acc > 0.0
-    return cand[keep], acc[keep]
+    return accumulate_scores(
+        cand, [(docs, scores, cd.spec["role"])
+               for (docs, scores), cd in zip(per_clause, scoring_clauses)],
+        combiner[0], combiner[1])
 
 
 def _phrase_in_segments(cd: _ClauseData, lo_arr, hi_arr):

@@ -471,10 +471,15 @@ def test_merge_crash_before_commit_is_harmless(spark, corpus_rows, tmp_path):
     assert [p[0] for p in post] == [p[0] for p in pre]  # same docs ranked
 
 
-def test_upsert_auto_merge_policy(spark, corpus_rows, tmp_path):
+@pytest.mark.parametrize("max_gens,n_upserts", [(2, 4), (3, 5)],
+                         ids=["gens2", "gens3"])
+def test_upsert_auto_merge_policy(spark, corpus_rows, tmp_path, max_gens,
+                                  n_upserts):
     """N upserts with max_generations=G keep the index at <= G generations
     while search results stay identical to the oracle over the final
-    corpus state (auto-merge is invisible to queries)."""
+    corpus state (auto-merge is invisible to queries). With G=3 the 5th
+    upsert merges a merged generation (new gen id, lowest part offset)
+    with its part-space neighbour."""
     from spyglass_spark.index.builder import build_index, upsert_documents
     from spyglass_spark.oracle.engine import OracleIndex
     from spyglass_spark.query.executor import SearchEngine
@@ -484,9 +489,9 @@ def test_upsert_auto_merge_policy(spark, corpus_rows, tmp_path):
     idx = str(tmp_path / "automerge")
     build_index(spark, spark.createDataFrame(docs[:120]), idx,
                 num_partitions=4, waves=1)
-    # 4 delta upserts: replacements + fresh docs, bounded at 2 generations
+    # delta upserts: replacements + fresh docs, bounded at G generations
     final = {d["url"]: d for d in docs[:120]}
-    for i in range(4):
+    for i in range(n_upserts):
         lo = 120 + i * 20
         batch = [dict(d) for d in docs[lo:lo + 20]]
         repl = dict(docs[i])  # re-add an existing url with new content
@@ -495,8 +500,8 @@ def test_upsert_auto_merge_policy(spark, corpus_rows, tmp_path):
         for d in batch:
             final[d["url"]] = d
         m = upsert_documents(spark, spark.createDataFrame(batch), idx,
-                             num_partitions=2, max_generations=2)
-        assert len(m.gen_list()) <= 2
+                             num_partitions=2, max_generations=max_gens)
+        assert len(m.gen_list()) <= max_gens
     # merged index == oracle over the final docs (single generation build:
     # after merges the tombstoned copies are physically gone)
     eng = SearchEngine(spark, idx)
@@ -508,7 +513,7 @@ def test_upsert_auto_merge_policy(spark, corpus_rows, tmp_path):
             assert u in final
     # the re-added docs are searchable with their NEW content
     hits = eng.search("upsert round", k=10).collect()
-    assert len(hits) == 4
+    assert len(hits) == n_upserts
 
 
 def test_compaction_crash_between_renames_self_heals(spark, corpus_rows,

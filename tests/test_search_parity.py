@@ -419,7 +419,7 @@ def test_search_union_vs_oracle(spark, built_index, tmp_path):
         search_union([], "fn")
 
 
-def test_session_prewarm_once_per_session(spark, built_index):
+def test_session_prewarm_once_per_session(spark, engine, built_index):
     """Engine open warms the generic SQL machinery exactly once per
     Spark session (keyed on applicationId): the second open must not
     re-run the warm jobs, and the warm must never affect search
