@@ -404,6 +404,73 @@ _NORM_CACHE_MAX = 8192
 _WARMED_SESSIONS: set = set()
 
 
+def _store_dataset(store_dir: str, epoch: str):
+    """pyarrow dataset over one generation's kind-partitioned store
+    (hive ``kind=``), cached per process and ``epoch``: the handle holds
+    the file listing, so repeat reads skip the directory walk (~0.1 s at
+    P=128). Every pyarrow read of the store goes through it."""
+    key = ("ds", store_dir, epoch)
+    ds = _NORM_CACHE.get(key)
+    if ds is None:
+        import pyarrow.dataset as pads
+
+        ds = _NORM_CACHE[key] = pads.dataset(
+            store_dir, format="parquet", partitioning="hive")
+    return ds
+
+
+def _local_postings(store_dirs, epoch: str, fields, terms,
+                    cols: list) -> pd.DataFrame:
+    """Driver-side pyarrow read of the posting chunks of ``fields`` ×
+    ``terms`` (kind-partition + field/term row-group pruned) — the
+    posting read of both driver-local paths (_score_local and the
+    driver-local match frame)."""
+    import pyarrow.dataset as pads
+
+    flt = ((pads.field("kind") == KIND_POSTING)
+           & pads.field("field").isin(list(fields))
+           & pads.field("term").isin(list(terms)))
+    chunks = []
+    for d in store_dirs:
+        tbl = _store_dataset(d, epoch).to_table(columns=cols, filter=flt)
+        if tbl.num_rows:
+            chunks.append(tbl.to_pandas())
+    if not chunks:
+        return pd.DataFrame({c: [] for c in cols})
+    return pd.concat(chunks, ignore_index=True) if len(chunks) > 1 \
+        else chunks[0]
+
+
+def _pair_ords(pdf: pd.DataFrame, by_pair: dict) -> pd.DataFrame:
+    """(doc_ord, cid) rows of a batch of posting chunks (part_id, field,
+    term, doc_bytes, tf_bytes): every doc_ord in the chunks whose
+    (field, term) pair belongs to clause ``cid`` (``by_pair``: pair →
+    clause ids). A pair shared by several clauses emits one row per
+    clause; chunks of pairs outside ``by_pair`` (an IN-list scan's
+    field × term over-selection) emit nothing. The one per-chunk ord
+    decoder of the unscored match-set path, run in Python workers
+    (_posting_ords) and on the driver (_match_ords_local)."""
+    outs = []
+    for pid, f_, t_, db, tb in zip(pdf["part_id"].tolist(),
+                                   pdf["field"].tolist(),
+                                   pdf["term"].tolist(),
+                                   pdf["doc_bytes"].tolist(),
+                                   pdf["tf_bytes"].tolist()):
+        cids = by_pair.get((f_, t_))
+        if not cids:
+            continue
+        docs, _ = decode_postings(db, tb)
+        base = np.uint64(int(pid)) << np.uint64(ORD_SHIFT)
+        ords = (base + docs).astype(np.int64)
+        for ci in cids:
+            outs.append(pd.DataFrame(
+                {"doc_ord": ords,
+                 "cid": np.full(ords.size, ci, dtype=np.int64)}))
+    return (pd.concat(outs) if outs else
+            pd.DataFrame({"doc_ord": pd.Series([], dtype="int64"),
+                          "cid": pd.Series([], dtype="int64")}))
+
+
 def _load_part_arrays(store_dirs: tuple, part_id: int, epoch: str):
     """(norm_arrays, fast_arrays) for one partition, read DIRECTLY from the
     kind=1/kind=4 store files (executor-side pyarrow, part-pruned) — the
@@ -422,15 +489,9 @@ def _load_part_arrays(store_dirs: tuple, part_id: int, epoch: str):
         # miss reads exactly the one or two files that contain the part
         # (~2 ms). One bounded metadata pass per worker, amortized across
         # every subsequent query.
-        ds_list = []
-        for d in store_dirs:
-            ds = _NORM_CACHE.get(("ds", d, epoch))
-            if ds is None:  # dataset handle holds the file listing
-                ds = _NORM_CACHE[("ds", d, epoch)] = pads.dataset(
-                    d, format="parquet", partitioning="hive")
-            ds_list.append(ds)
         pmap = _part_fragment_map(
-            ds_list, _NORM_CACHE, ("pmap", store_dirs, epoch),
+            [_store_dataset(d, epoch) for d in store_dirs],
+            _NORM_CACHE, ("pmap", store_dirs, epoch),
             frag_filter=pads.field("kind").isin([KIND_NORMS, KIND_FAST]))
         norm_arrays: dict = {}
         fast_arrays: dict = {}
@@ -761,7 +822,15 @@ class SearchEngine:
         self._doc_meta_base = doc_meta_view(self.spark, self.index_dir, self.gens)
         self._df_cache: dict[tuple[str, str], int] = {}
         self._cf_cache: dict[tuple[str, str], int] = {}
-        self._meta_ds_cache: dict = {}  # pyarrow dataset handles per gen
+        # the store directories and their cache epoch: commit_seq
+        # (monotonic, bumped per commit) versions the process-level
+        # pyarrow handles and the per-worker norm/tombstone caches —
+        # created_utc alone is 1-second-granular, so two delete commits
+        # in the same second overwriting the same tombstone dir would
+        # leave warmed executors serving the first commit's ordinals
+        self._store_dirs = tuple(f"{self.index_dir}/{g['prefix']}/store"
+                                 for g in self.gens)
+        self._store_epoch = f"{m.created_utc}#{getattr(m, 'commit_seq', 0)}"
         self._tomb_cache = None
         self._scan_aligned = self._compute_scan_aligned()
         self._prewarm_session()
@@ -781,14 +850,14 @@ class SearchEngine:
         Arrow round trip and one store-row parquet read (vectorized
         reader classes). Reads a single store row, caches no results and
         leaves no query-visible state; best-effort (a failure is logged
-        as a warning), once per applicationId."""
+        as a warning and the next engine open retries), once per
+        applicationId once it succeeds."""
         try:
             app = self.spark.sparkContext.applicationId
         except Exception:
             return
         if app in _WARMED_SESSIONS:
             return
-        _WARMED_SESSIONS.add(app)
         try:
             sp = self.spark
             n = max(sp.sparkContext.defaultParallelism, 2)
@@ -807,7 +876,9 @@ class SearchEngine:
             self._postings_base.select("part_id").limit(1).collect()
         except Exception as e:
             _log.warning("session warm-up (_prewarm_session) failed; the "
-                         "first distributed query runs cold: %s", e)
+                         "next engine open retries it: %s", e)
+            return
+        _WARMED_SESSIONS.add(app)
 
     def _prewarm_local_exec(self) -> None:
         """Open-time warm-up of the driver-local executor's metadata
@@ -826,18 +897,10 @@ class SearchEngine:
             import pyarrow.dataset as pads
 
             m = self.manifest
-            epoch = f"{m.created_utc}#{getattr(m, 'commit_seq', 0)}"
-            dirs = tuple(f"{self.index_dir}/{g['prefix']}/store"
-                         for g in self.gens)
-            ds_list = []
-            for d in dirs:
-                ds = _NORM_CACHE.get(("ds", d, epoch))
-                if ds is None:
-                    ds = _NORM_CACHE[("ds", d, epoch)] = pads.dataset(
-                        d, format="parquet", partitioning="hive")
-                ds_list.append(ds)
+            epoch, dirs = self._store_epoch, self._store_dirs
             pmap = _part_fragment_map(
-                ds_list, _NORM_CACHE, ("pmap", dirs, epoch),
+                [_store_dataset(d, epoch) for d in dirs],
+                _NORM_CACHE, ("pmap", dirs, epoch),
                 frag_filter=pads.field("kind").isin([KIND_NORMS, KIND_FAST]))
             # norm/fast arrays are ~#docs bytes per field — preload only
             # when the whole plane fits a small driver budget
@@ -1473,14 +1536,8 @@ class SearchEngine:
             # (part-pruned pyarrow over kind=1/kind=4, cached per worker) —
             # no norms scan, no touched-parts semijoin, no cogroup: the
             # whole search is scan → one exchange → score
-            "store_dirs": [f"{self.index_dir}/{g['prefix']}/store"
-                           for g in self.gens],
-            # commit_seq (monotonic, bumped per commit) versions the
-            # per-worker norm/tombstone caches: created_utc alone is
-            # 1-second-granular, so two delete commits in the same second
-            # overwriting the same tombstone dir would leave warmed
-            # executors serving the first commit's cached ordinals
-            "store_epoch": f"{m.created_utc}#{getattr(m, 'commit_seq', 0)}",
+            "store_dirs": list(self._store_dirs),
+            "store_epoch": self._store_epoch,
         }
         plan.update(self._tombstone_plan())
 
@@ -1597,30 +1654,12 @@ class SearchEngine:
         sharing the process-level norm/tombstone caches the executors
         use. Bitwise-identical to the distributed path by construction —
         pinned by tests/test_search_parity.py::test_local_exec_ab_parity."""
-        import pyarrow.dataset as pads
-
         cols = ["part_id", "field", "term", "df_part", "cf_part",
                 "n_local", "doc_bytes", "tf_bytes", "meta_bytes"]
         if needs_pos:
             cols.append("pos_bytes")
-        flt = ((pads.field("kind") == KIND_POSTING)
-               & pads.field("field").isin(list(fields))
-               & pads.field("term").isin(list(terms)))
-        epoch = plan.get("store_epoch", "")
-        chunks = []
-        for d in plan["store_dirs"]:
-            ds = _NORM_CACHE.get(("ds", d, epoch))
-            if ds is None:  # same handle _load_part_arrays caches
-                ds = _NORM_CACHE[("ds", d, epoch)] = pads.dataset(
-                    d, format="parquet", partitioning="hive")
-            tbl = ds.to_table(columns=cols, filter=flt)
-            if tbl.num_rows:
-                chunks.append(tbl.to_pandas())
-        if not chunks:
-            pdf = pd.DataFrame({c: [] for c in cols})
-        else:
-            pdf = pd.concat(chunks, ignore_index=True) \
-                if len(chunks) > 1 else chunks[0]
+        pdf = _local_postings(plan["store_dirs"], plan.get("store_epoch", ""),
+                              fields, terms, cols)
         outs = [_score_partition(plan, g)
                 for _, g in pdf.groupby("part_id", sort=True)]
         if not outs:
@@ -1692,45 +1731,38 @@ class SearchEngine:
                 .orderBy("query_id", "rank"))
 
     def _doc_meta_pyarrow(self, ords: set[int]) -> dict[int, tuple]:
-        """doc_ord → (doc_id, url, domain, title, description, tags) via a pyarrow read
-        of the kind=3 store files pruned to the hit partitions (row-group
-        stats prune on part_id/local_ord inside each part file)."""
+        """doc_ord → (doc_id, url, domain, title, description, tags) via
+        the pruned pyarrow kind=3 read (_doc_meta_read)."""
+        cols = ["doc_id", "url", "domain", "title", "description", "tags"]
+        tbl, doc = self._doc_meta_read(
+            np.fromiter(ords, np.int64, len(ords)),
+            ["part_id", "local_ord", *cols])
+        return dict(zip(doc.tolist(),
+                        zip(*(tbl.column(c).to_pylist() for c in cols))))
+
+    def _doc_meta_read(self, ords: np.ndarray, cols: list):
+        """(pyarrow table of ``cols``, doc_ord array) for the kind=3 rows
+        of exactly ``ords`` — a driver-side read of the store files
+        pruned to the ords' partitions (row-group stats prune on
+        part_id/local_ord inside each part file), then the exact doc_ord
+        set. ``cols`` must include part_id and local_ord."""
+        import pyarrow as pa
         import pyarrow.dataset as pads
 
-        parts = sorted({o >> ORD_SHIFT for o in ords})
-        locs = sorted({o & ((1 << ORD_SHIFT) - 1) for o in ords})
-        flt = (pads.field("kind") == KIND_DOCMETA) \
-            & pads.field("part_id").isin(parts) \
-            & pads.field("local_ord").isin(locs)
-        out: dict[int, tuple] = {}
-        # dataset handles hold the file listing — cached per generation so
-        # repeated searches skip the store-directory walk (~0.1 s at
-        # P=128); refresh() rebuilds the engine and drops the cache
-        ds_cache = getattr(self, "_meta_ds_cache", None)
-        if ds_cache is None:
-            ds_cache = self._meta_ds_cache = {}
-        for g in self.gens:
-            ds = ds_cache.get(g["prefix"])
-            if ds is None:
-                ds = ds_cache[g["prefix"]] = pads.dataset(
-                    f"{self.index_dir}/{g['prefix']}/store",
-                    format="parquet", partitioning="hive")
-            tbl = ds.to_table(columns=["part_id", "local_ord", "doc_id", "url",
-                                       "domain", "title", "description",
-                                       "tags"], filter=flt)
-            for p, lo, did, url, dom, ti, desc, tags in zip(
-                    tbl.column("part_id").to_pylist(),
-                    tbl.column("local_ord").to_pylist(),
-                    tbl.column("doc_id").to_pylist(),
-                    tbl.column("url").to_pylist(),
-                    tbl.column("domain").to_pylist(),
-                    tbl.column("title").to_pylist(),
-                    tbl.column("description").to_pylist(),
-                    tbl.column("tags").to_pylist()):
-                ord_ = (int(p) << ORD_SHIFT) + int(lo)
-                if ord_ in ords:
-                    out[ord_] = (did, url, dom, ti, desc, tags)
-        return out
+        flt = ((pads.field("kind") == KIND_DOCMETA)
+               & pads.field("part_id").isin(
+                   np.unique(ords >> ORD_SHIFT).tolist())
+               & pads.field("local_ord").isin(
+                   np.unique(ords & ((1 << ORD_SHIFT) - 1)).tolist()))
+        tbl = pa.concat_tables(
+            [_store_dataset(d, self._store_epoch).to_table(columns=cols,
+                                                           filter=flt)
+             for d in self._store_dirs], promote_options="default")
+        doc = ((tbl.column("part_id").to_numpy().astype(np.int64)
+                << ORD_SHIFT)
+               + tbl.column("local_ord").to_numpy().astype(np.int64))
+        keep = np.isin(doc, ords)
+        return tbl.filter(keep), doc[keep]
 
     def _merge_window(self, partial: DataFrame, k: int, offset: int) -> DataFrame:
         """Distributed global top-k (the scalable fallback): identical
@@ -2065,25 +2097,7 @@ class SearchEngine:
 
         def decode(batches):
             for pdf in batches:
-                outs = []
-                for pid, f_, t_, db, tb in zip(pdf["part_id"].tolist(),
-                                               pdf["field"].tolist(),
-                                               pdf["term"].tolist(),
-                                               pdf["doc_bytes"].tolist(),
-                                               pdf["tf_bytes"].tolist()):
-                    cids = by_pair.get((f_, t_))
-                    if not cids:
-                        continue
-                    docs, _ = decode_postings(db, tb)
-                    base = np.uint64(int(pid)) << np.uint64(ORD_SHIFT)
-                    ords = (base + docs).astype(np.int64)
-                    for ci in cids:
-                        outs.append(pd.DataFrame(
-                            {"doc_ord": ords,
-                             "cid": np.full(ords.size, ci, dtype=np.int64)}))
-                yield (pd.concat(outs) if outs else
-                       pd.DataFrame({"doc_ord": pd.Series([], dtype="int64"),
-                                     "cid": pd.Series([], dtype="int64")}))
+                yield _pair_ords(pdf, by_pair)
 
         return rows.mapInPandas(decode, "doc_ord long, cid long")
 
@@ -2276,30 +2290,36 @@ class SearchEngine:
                 "search instead")
         msm = int(getattr(cq, "min_should_match", 0))
         union_pairs = term_match_pairs(cq, msm, caller)
+        # the clauses' (field, term) pair sets: Should side (the union,
+        # or one set per clause under msm ≥ 2), then the intersected
+        # (extra OR-groups, Musts) and the subtracted (MustNots) sides
+        should = ([{(c.field, t) for t in c.terms} for c in cq.should_group]
+                  if msm > 1 else [union_pairs])
+        musts = ([{(c.field, t) for c in grp for t in c.terms}
+                  for grp in cq.extra_groups]
+                 + [{(c.field, t) for t in c.terms} for c in cq.musts])
+        nots = [{(c.field, t) for t in c.terms} for c in cq.must_nots]
+        if self._match_local_ok(should, musts + nots):
+            return self._doc_meta_local(
+                self._match_ords_local(msm, should, musts, nots),
+                getattr(cq, "range_musts", ()))
 
         def any_of(pairs):  # DISTINCT doc_ords matching any pair
             return self._posting_ords([pairs]).select("doc_ord").distinct()
 
         if msm > 1:
             # one partial→final distinct-clause count (doc-local keys)
-            match = (self._posting_ords([{(c.field, t) for t in c.terms}
-                                         for c in cq.should_group])
+            match = (self._posting_ords(should)
                      .groupBy("doc_ord")
                      .agg(F.countDistinct("cid").alias("_nc"))
                      .filter(F.col("_nc") >= msm)
                      .select("doc_ord"))
         else:
             match = any_of(union_pairs)
-        for grp in cq.extra_groups:
-            match = match.join(
-                any_of({(c.field, t) for c in grp for t in c.terms}),
-                "doc_ord", "leftsemi")
-        for c in cq.musts:
-            match = match.join(any_of({(c.field, t) for t in c.terms}),
-                               "doc_ord", "leftsemi")
-        for c in cq.must_nots:
-            match = match.join(any_of({(c.field, t) for t in c.terms}),
-                               "doc_ord", "leftanti")
+        for pairs in musts:
+            match = match.join(any_of(pairs), "doc_ord", "leftsemi")
+        for pairs in nots:
+            match = match.join(any_of(pairs), "doc_ord", "leftanti")
         dm = self._doc_meta_base.join(match, "doc_ord", "leftsemi")
         for field, ge, le in getattr(cq, "range_musts", ()):
             # doc_meta date columns hold the same µs int64 the fast
@@ -2309,6 +2329,90 @@ class SearchEngine:
             if le is not None:
                 dm = dm.filter(F.col(field) <= le)
         return self._anti_tombstone(dm)
+
+    def _match_local_ok(self, should: list, others: list) -> bool:
+        """Gate of the driver-local match frame, the _execute_compiled
+        gates on the match-set path: LOCAL_EXEC_MODE (never | always |
+        auto), total parts ≤ LOCAL_EXEC_MAX_PARTS, Σ global df over the
+        clause pairs ≤ LOCAL_EXEC_MAX_ROWS (the driver decode volume),
+        the match-set bound min(num_docs, Σ df of the Should union) ≤
+        MERGE_COLLECT_MAX (the frame crosses to the JVM as one Arrow
+        LocalRelation), and no tombstone set too large to ship
+        (tombstone_dirs — those stay executor-side reads)."""
+        if LOCAL_EXEC_MODE == "never":
+            return False
+        if sum(g["num_partitions"] for g in self.gens) > LOCAL_EXEC_MAX_PARTS:
+            return False
+        if LOCAL_EXEC_MODE != "always":
+            union = set().union(*should)
+            dfs = self._term_dfs(union.union(*others))
+            if sum(dfs.values()) > LOCAL_EXEC_MAX_ROWS:
+                return False
+            if min(self.manifest.num_docs,
+                   sum(dfs[p] for p in union)) > MERGE_COLLECT_MAX:
+                return False
+        return not self._tombstone_plan()["tombstone_dirs"]
+
+    def _match_ords_local(self, msm: int, should: list, musts: list,
+                          nots: list) -> np.ndarray:
+        """The live match set (sorted doc_ords) computed on the driver:
+        the clause pairs' posting chunks through the driver-local
+        posting read and the one ord decoder (_pair_ords), then numpy
+        set operations in _match_doc_meta's order — Should union (or
+        the msm distinct-clause count), ∩ each extra group and Must,
+        − each MustNot, − the tombstones."""
+        clauses = should + musts + nots
+        by_pair: dict[tuple, list[int]] = {}
+        for ci, pairs in enumerate(clauses):
+            for p in pairs:
+                by_pair.setdefault(p, []).append(ci)
+        rows = _pair_ords(_local_postings(
+            self._store_dirs, self._store_epoch,
+            sorted({f for f, _ in by_pair}), sorted({t for _, t in by_pair}),
+            ["part_id", "field", "term", "doc_bytes", "tf_bytes"]), by_pair)
+        doc = rows["doc_ord"].to_numpy()
+        cid = rows["cid"].to_numpy()
+        per = [np.unique(doc[cid == ci]) for ci in range(len(clauses))]
+        ns, nm = len(should), len(musts)
+        if msm > 1:
+            docs, nc = np.unique(np.concatenate(per[:ns]),
+                                 return_counts=True)
+            match = docs[nc >= msm]
+        else:
+            match = per[0]
+        for a in per[ns:ns + nm]:
+            match = np.intersect1d(match, a, assume_unique=True)
+        for a in per[ns + nm:]:
+            match = np.setdiff1d(match, a, assume_unique=True)
+        return np.setdiff1d(match, self._tombstone_plan()["tombstone_ords"])
+
+    def _doc_meta_local(self, ords: np.ndarray, range_musts) -> DataFrame:
+        """The kind=3 rows of ``ords`` (_doc_meta_read) with the
+        date-range Musts applied (NULL never matches), as an Arrow
+        LocalRelation with the distributed frame's schema (doc_ord, then
+        ``_doc_meta_base``'s columns), in doc_ord order — the match frame
+        without a Spark job."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.types import StructType
+
+        base = self._doc_meta_base
+        # the distributed frame's column order: its doc_ord join key first
+        cols = [c for c in base.columns if c != "doc_ord"]
+        if not ords.size:  # optimized to an empty LocalRelation
+            return base.select("doc_ord", *cols).limit(0)
+        tbl, doc = self._doc_meta_read(ords, cols)
+        for field, ge, le in range_musts:
+            for bound, cmp in ((ge, pc.greater_equal), (le, pc.less_equal)):
+                if bound is not None:
+                    keep = pc.fill_null(cmp(tbl.column(field), bound), False)
+                    tbl = tbl.filter(keep)
+                    doc = doc[keep.to_numpy(zero_copy_only=False)]
+        order = np.argsort(doc, kind="stable")
+        tbl = tbl.take(order).add_column(0, "doc_ord",
+                                         pa.array(doc[order], pa.int64()))
+        return self.spark.createDataFrame(tbl, StructType(
+            [base.schema["doc_ord"]] + [base.schema[c] for c in cols]))
 
     def significant_terms(self, query: str, filters=(), boosts=(),
                           field: str = "content", size: int = 10,

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the spyglass_spark package
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "spyglass-spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -28,5 +31,9 @@ def get_spark(app_name: str = "spyglass-spark", master: str | None = None,
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        # Python workers import this package (UDF closures reference its
+        # functions): put its parent directory on their path, whatever
+        # the caller's working directory — PySpark merges it with its own
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
         .getOrCreate()
     )

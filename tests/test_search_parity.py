@@ -362,6 +362,107 @@ def test_local_exec_ab_parity(spark, built_index, monkeypatch):
                     rb["score"], rb["doc_ord"])
 
 
+def _agg_ab_queries(docs):
+    """Match-set shapes of the aggregation A/B: plain and phrase-bearing
+    Should groups, msm=2 over two term clauses, a Must, a MustNot, a
+    date-range filter and an empty match set."""
+    dates = sorted(d["lastmodified"] for d in docs
+                   if d.get("lastmodified") is not None)
+    return ["fn", "parse token stream",
+            {"term_set": ["fn", "index"], "min_should_match": 2},
+            {"parsed": "fn +main"}, {"parsed": "fn -main"},
+            {"query": "index", "filters": [
+                ("lastmodified_ge", dates[len(dates) // 2])]},
+            "zzzznohit"]
+
+
+def _agg_ab_rows(X, eng, monkeypatch, mode, queries, agg_queries):
+    """Under LOCAL_EXEC_MODE ``mode``: the match frame of every query in
+    ``queries`` (all its columns, in doc_ord order), and count_matches,
+    facet_counts, terms_agg(domain) and date_histogram of every query
+    in ``agg_queries`` (rows order-normalized)."""
+    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", mode)
+    frames = [sorted(eng._match_frame(q, (), (), "ab").collect(),
+                     key=lambda r: r["doc_ord"]) for q in queries]
+    aggs = [(eng.count_matches(q).collect(),
+             sorted(eng.facet_counts(q).collect(), key=repr),
+             sorted(eng.terms_agg(q, facet_col="domain").collect(), key=repr),
+             sorted(eng.date_histogram(q).collect(), key=repr))
+            for q in agg_queries]
+    return frames, aggs
+
+
+def _frame_is_local(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LocalRelation" in plan and "MapInPandas" not in plan
+
+
+def test_agg_local_exec_ab_parity(spark, built_index, tmp_path,
+                                  monkeypatch):
+    """The driver-local match frame (pyarrow posting read + numpy set
+    operations + a kind=3 pyarrow read, as an Arrow LocalRelation) vs
+    the distributed frame must give identical rows — the gate is a
+    scale/latency choice only. Covered on the fixture index and on a
+    two-generation copy carrying both tombstone sources (upsert /
+    delete_by_urls side tables, delete_by_ids manifest doc_ids). The
+    local frame launches no Spark job on a fresh index; a match-set
+    bound or decode volume over its cap and an unshippable tombstone
+    set take the distributed path."""
+    import shutil
+
+    from spyglass_spark.index.builder import (delete_by_ids, delete_by_urls,
+                                              upsert_documents)
+    from spyglass_spark.query import executor as X
+
+    docs = built_index["docs"]
+    queries = _agg_ab_queries(docs)
+    eng = X.SearchEngine(spark, built_index["index_dir"])
+    sc = spark.sparkContext
+    sc.setJobGroup("agg-local-frame", "driver-local match frame")
+    try:
+        frame = eng._match_frame("fn", (), (), "ab")  # mode auto
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("agg-local-frame") == []
+    assert _frame_is_local(frame)
+
+    agg_queries = ["fn", {"parsed": "fn -main"}]
+    local = _agg_ab_rows(X, eng, monkeypatch, "always", queries, agg_queries)
+    dist = _agg_ab_rows(X, eng, monkeypatch, "never", queries, agg_queries)
+    assert local == dist
+    frames, aggs = local
+    assert all(frames[:-1]) and frames[-1] == []  # last: empty match set
+    assert all(a[0][0]["n"] > 0 and a[1] and a[2] and a[3] for a in aggs)
+
+    # over a cap → distributed (auto mode)
+    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "auto")
+    monkeypatch.setattr(X, "MERGE_COLLECT_MAX", 0)
+    assert not _frame_is_local(eng._match_frame("fn", (), (), "ab"))
+    monkeypatch.undo()
+    monkeypatch.setattr(X, "LOCAL_EXEC_MAX_ROWS", 0)
+    assert not _frame_is_local(eng._match_frame("fn", (), (), "ab"))
+
+    # a second generation plus both tombstone sources
+    idx = str(tmp_path / "agg_ab")
+    shutil.copytree(built_index["index_dir"], idx)
+    upsert_documents(spark, spark.createDataFrame(docs[:10]), idx,
+                     num_partitions=2)
+    delete_by_urls(spark, idx, [docs[1]["url"], docs[20]["url"]])
+    delete_by_ids(idx, [docs[2]["doc_id"], docs[30]["doc_id"]])
+    teng = X.SearchEngine(spark, idx)
+    plan = teng._tombstone_plan()
+    assert plan["tombstone_ords"].size >= 14 and not plan["tombstone_dirs"]
+    local = _agg_ab_rows(X, teng, monkeypatch, "always", queries, ["fn"])
+    dist = _agg_ab_rows(X, teng, monkeypatch, "never", queries, ["fn"])
+    assert local == dist
+    # tombstones too many to ship → distributed even when forced local
+    monkeypatch.setattr(X, "TOMBSTONE_SHIP_MAX", 0)
+    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "always")
+    teng.refresh()
+    assert teng._tombstone_plan()["tombstone_dirs"]
+    assert not _frame_is_local(teng._match_frame("fn", (), (), "ab"))
+
+
 def test_scan_aligned_fallback_trigger(spark, built_index):
     """A posting file bigger than maxPartitionBytes/2 could be split
     across scan tasks (partial parts → wrong per-part scoring), so
@@ -443,3 +544,42 @@ def test_session_prewarm_once_per_session(spark, engine, built_index):
         spark.range = orig_range
     assert calls == []  # guard short-circuited: no warm jobs re-ran
     assert len(X._WARMED_SESSIONS) == before
+
+
+def test_session_prewarm_retried_after_failure(spark, built_index,
+                                               monkeypatch):
+    """A warm-up that fails does not mark the session warmed: the next
+    engine open runs the warm again, and marks the session once it
+    succeeds."""
+    import spyglass_spark.query.executor as X
+
+    monkeypatch.setattr(X, "_WARMED_SESSIONS", set())
+    app = spark.sparkContext.applicationId
+    calls = []
+    orig_range = spark.range
+
+    def flaky_range(*a, **kw):
+        calls.append(a)
+        if len(calls) == 1:
+            raise RuntimeError("injected warm-up failure")
+        return orig_range(*a, **kw)
+
+    monkeypatch.setattr(spark, "range", flaky_range)
+    X.SearchEngine(spark, built_index["index_dir"])
+    assert len(calls) == 1 and app not in X._WARMED_SESSIONS
+    X.SearchEngine(spark, built_index["index_dir"])
+    assert len(calls) > 1  # the warm ran again
+    assert app in X._WARMED_SESSIONS
+
+
+def test_session_ships_package_to_workers(spark):
+    """Python workers find the package whatever the driver's working
+    directory: get_spark puts the package's parent directory on their
+    PYTHONPATH."""
+    import os
+
+    from spyglass_spark.session import PACKAGE_PARENT
+
+    assert spark.conf.get("spark.executorEnv.PYTHONPATH") == PACKAGE_PARENT
+    assert os.path.isfile(os.path.join(PACKAGE_PARENT, "spyglass_spark",
+                                       "__init__.py"))
