@@ -4,37 +4,39 @@
 
 Covers the BASELINE.md targets:
   - index-build throughput (docs/sec, tokens/sec, skew ratios)
-  - scaling efficiency between two parallelism levels (local[8] vs
-    local[32] — the sandbox proxy for N vs 4N executors), run as separate
-    JVMs via subprocess on the SAME input
+  - scaling efficiency between two parallelism levels, lo = N/4 and
+    hi = N cores (N = SPARK_GRAFT_CPUS, default the host's CPU count),
+    run as separate JVMs via subprocess on the SAME input
   - headline query latencies: BM25 search (hot term / phrase / batch),
     SQL-oracle-form BM25, minhash-LSH dedup, ANN cosine top-k.
 
-Noise handling (the sandbox host shares cores with hypervisor neighbors;
-identical builds vary >2×, and /proc/loadavg shows neighbor load even when
-this container is idle):
-  - each leg waits (bounded) for a quiet window before starting and records
-    the loadavg it actually ran under;
-  - legs are INTERLEAVED (8, 32, 8, 32, ...) so noise hits both levels,
-    keeping best-of-N per level; rounds stop early once both the end-to-end
-    and the kernel-control efficiency clear the 0.8 target;
-  - a pure tokenize+encode kernel at 8 and 32 concurrent processes is the
-    control: if the kernel itself doesn't scale in the same window, the
-    host was saturated and the end-to-end number is not interpretable;
+The host is measured as it is, and the variance is reported beside each
+number:
+  - legs are INTERLEAVED (lo, hi, lo, hi, ...) for exactly LEG_ROUNDS
+    rounds so noise hits both levels; each level keeps its best leg and
+    reports build_sec_spread_{c}c = [min, median, max] over its rounds;
+  - a pure tokenize+encode kernel at lo and hi concurrent processes is
+    the control: if the kernel itself doesn't scale, the host was
+    saturated and the end-to-end ratio is not interpretable;
   - each leg also times a small warmup build of the IDENTICAL derivation
     (1/REPLICAS of the docs): the marginal throughput
     (docs_big − docs_small) / (T_big − T_small) cancels fixed per-build
     orchestration cost to first order, isolating the scalable portion —
-    reported as scaling_efficiency_marginal_8_to_32.
+    reported as scaling_efficiency_marginal_{lo}_to_{hi};
+  - the headline query set runs three times on the same engine:
+    ``queries`` is the first pass, ``queries_spread`` the
+    [min, median, max] of each query over the three.
+At N = 32 the build keys are the historical _8c/_32c names, so the
+BENCH_r0*.json rows stay comparable on a 32-core host.
 
 Corpus: deterministic derivation of {sf_dir}/documents.parquet, replicated
 REPLICAS× with per-doc content repeated CONTENT_REPEAT× (real source files
 are KBs, not 300 bytes — token-level work must dominate row overhead for
 the scaling measurement to mean anything). No external data.
 
-Work dirs default to /dev/shm: the sandbox has ONE ~360 MB/s block device
-shared by all cores, while a real N-executor cluster has N× aggregate disk
-bandwidth — tmpfs is the honest stand-in for per-executor local disks.
+Work dirs default to /dev/shm: tmpfs stands in for per-executor local
+disks, so the build legs measure CPU work rather than one shared block
+device.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import time
@@ -50,47 +53,18 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 REPLICAS = int(os.environ.get("SPYGLASS_BENCH_REPLICAS", "64"))
-LEG_ROUNDS = int(os.environ.get("SPYGLASS_BENCH_LEG_RUNS", "2"))
+# one round keeps a full run under 10 min on a 4-CPU host (7.5 min end
+# to end with one round, 11.7 min with two: the 1-core leg alone builds
+# for 140-165 s); more rounds give the build_sec spreads real width
+LEG_ROUNDS = int(os.environ.get("SPYGLASS_BENCH_LEG_RUNS", "1"))
 CONTENT_REPEAT = int(os.environ.get("SPYGLASS_BENCH_CONTENT_REPEAT", "16"))
 NUM_PARTS = int(os.environ.get("SPYGLASS_BENCH_PARTS", "128"))
-QUIET_LOAD = float(os.environ.get("SPYGLASS_BENCH_QUIET_LOAD", "6"))
-QUIET_WAIT_SEC = int(os.environ.get("SPYGLASS_BENCH_QUIET_WAIT", "120"))
-# soft wall-clock budget for the scaling legs: once exceeded, remaining
-# rounds are skipped (keep whatever best-of was captured so far)
-BUDGET_SEC = int(os.environ.get("SPYGLASS_BENCH_BUDGET_SEC", "900"))
 WORK_DIR = os.environ.get("SPYGLASS_BENCH_DIR",
                           "/dev/shm/spyglass_bench"
                           if os.path.isdir("/dev/shm") else "/tmp/spyglass_bench")
-# window-credibility floor for the committed build row: single-proc
-# tokenize kernel runs ≈3.8-4.3 M tok/s quiet; within ~2× of quiet means
-# the leg is interpretable. Legs below this get the window_noisy marker
-# and the committed row falls back to the best CREDIBLE leg on record.
-MINI_CREDIBLE = float(os.environ.get("SPYGLASS_BENCH_MINI_CREDIBLE", "1.9e6"))
-BUILD_LEG_LOG = os.path.join(REPO, "build_legs_log.jsonl")
-
-
-def _loadavg() -> float:
-    try:
-        with open("/proc/loadavg") as f:
-            return float(f.read().split()[0])
-    except OSError:
-        return -1.0
-
-
-def _wait_quiet(max_wait: int = QUIET_WAIT_SEC) -> float:
-    """Bounded wait for neighbor load to drop; returns the loadavg we
-    proceed under (evidence, recorded in the output)."""
-    deadline = time.time() + max_wait
-    best = _loadavg()
-    while time.time() < deadline:
-        la = _loadavg()
-        best = min(best, la)
-        if la < QUIET_LOAD:
-            return la
-        time.sleep(10)
-    return _loadavg()
+HEADLINE_PASSES = 3
 
 
 def _leg_session(cores: int):
@@ -172,82 +146,64 @@ def _run_leg(cores: int) -> dict:
     out = f"{WORK_DIR}/leg_{cores}.json"
     env = dict(os.environ)
     env.setdefault("SPARK_GRAFT_SF_DIR", SF_DIR)
-    load_before = _wait_quiet()
-    mini_before = _kernel_throughput(1)  # window evidence for THIS leg
     subprocess.run([sys.executable, os.path.abspath(__file__),
                     "--build-leg", str(cores), out], check=True, env=env,
                    stdout=subprocess.DEVNULL)
     with open(out) as f:
-        r = json.load(f)
-    r["loadavg_before"] = load_before
-    r["loadavg_after"] = _loadavg()
-    r["mini_rate_before"] = round(mini_before, 1)
-    # evidence trail: every leg ever run, with its window credibility —
-    # the committed row can fall back to the best credible leg on record
-    rec = dict(r)
-    rec.update(ts=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-               replicas=REPLICAS, content_repeat=CONTENT_REPEAT,
-               num_partitions=NUM_PARTS, sf=_sf_of(SF_DIR))
-    rec.pop("index_dir", None)
-    try:
-        with open(BUILD_LEG_LOG, "a") as f:
-            f.write(json.dumps(rec) + "\n")
-    except OSError:
-        pass
-    return r
+        return json.load(f)
 
 
-def _best_credible_pair() -> dict | None:
-    """Best credible (mini_rate ≥ MINI_CREDIBLE) 8/32 leg pair from the
-    build-leg evidence log, matched on corpus shape. None when either
-    level has no credible leg yet."""
-    if not os.path.exists(BUILD_LEG_LOG):
-        return None
-    best: dict[int, dict] = {}
-    with open(BUILD_LEG_LOG) as f:
-        for line in f:
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            if (rec.get("mini_rate_before", 0) < MINI_CREDIBLE
-                    or rec.get("replicas") != REPLICAS
-                    or rec.get("content_repeat") != CONTENT_REPEAT
-                    or rec.get("sf") != _sf_of(SF_DIR)):
-                continue
-            c = rec.get("cores")
-            if c in (8, 32) and (c not in best
-                                 or rec["build_sec"] < best[c]["build_sec"]):
-                best[c] = rec
-    if 8 not in best or 32 not in best:
-        return None
-    b8, b32 = best[8], best[32]
-    # the pair may come from DIFFERENT windows (leg_sniper captures one
-    # leg per window): absolute build times stay valid per-leg evidence,
-    # but the cross-window ratio is NOT a scaling measurement — a window
-    # whose bandwidth feeds an 8-core leg can still strangle a 32-core
-    # one (4× the bus demand), so equal mini-rates don't make the ratio
-    # meaningful. Only a same-window pair (the interleaved bench run or
-    # the probe's in-window legs) counts; flag everything else.
-    same_window = b8["ts"][:13] == b32["ts"][:13] and abs(
-        int(b8["ts"][14:16]) - int(b32["ts"][14:16])) <= 15
-    out_flag = {} if same_window else {"efficiency_not_comparable": True}
-    return out_flag | {
-        "build_sec_8c": round(b8["build_sec"], 2),
-        "build_sec_32c": round(b32["build_sec"], 2),
-        "docs_per_sec_8c": round(b8["docs_per_sec"], 1),
-        "docs_per_sec_32c": round(b32["docs_per_sec"], 1),
-        "scaling_efficiency_8_to_32":
-            round((b32["docs_per_sec"] / b8["docs_per_sec"]) / 4.0, 3),
-        "marginal_docs_per_sec_8c": round(b8["marginal_docs_per_sec"], 1),
-        "marginal_docs_per_sec_32c": round(b32["marginal_docs_per_sec"], 1),
-        "scaling_efficiency_marginal_8_to_32":
-            round((b32["marginal_docs_per_sec"]
-                   / b8["marginal_docs_per_sec"]) / 4.0, 3),
-        "mini_rate_8c_leg": b8["mini_rate_before"],
-        "mini_rate_32c_leg": b32["mini_rate_before"],
-        "ts_8c": b8["ts"], "ts_32c": b32["ts"],
+def leg_levels(cpus: int) -> tuple[int, int]:
+    """The two build parallelism levels: (N/4, N), floored at 1."""
+    return max(1, cpus // 4), cpus
+
+
+def spread(values) -> list:
+    """[min, median, max] — the variance every repeated number reports."""
+    return [min(values), statistics.median(values), max(values)]
+
+
+def _best_leg(legs: list[dict], cores: int) -> dict:
+    return min((g for g in legs if g["cores"] == cores),
+               key=lambda r: r["build_sec"])
+
+
+def summarize_legs(legs: list[dict], kernel: dict[int, float],
+                   lo: int, hi: int) -> dict:
+    """Build-leg summary keyed by core count: each level keeps its
+    fastest leg (by build_sec) plus the [min, median, max] build_sec
+    over all its legs; ratios are divided by hi/lo so 1.0 is linear
+    scaling. ``kernel`` is the best control throughput per level."""
+    b_lo, b_hi = _best_leg(legs, lo), _best_leg(legs, hi)
+    ideal = hi / lo
+    out = {
+        "n_docs": b_hi["n_docs"],
+        f"docs_per_sec_{lo}c": round(b_lo["docs_per_sec"], 1),
+        f"docs_per_sec_{hi}c": round(b_hi["docs_per_sec"], 1),
+        f"tokens_per_sec_{hi}c": round(b_hi["tokens_per_sec"], 1),
+        f"build_sec_{lo}c": round(b_lo["build_sec"], 2),
+        f"build_sec_{hi}c": round(b_hi["build_sec"], 2),
+        f"stage1_sec_{hi}c": b_hi.get("stage1_sec"),
+        f"stats_sec_{hi}c": b_hi.get("stats_sec"),
+        f"scaling_efficiency_{lo}_to_{hi}": round(
+            (b_hi["docs_per_sec"] / b_lo["docs_per_sec"]) / ideal, 3),
+        f"marginal_docs_per_sec_{lo}c": round(b_lo["marginal_docs_per_sec"], 1),
+        f"marginal_docs_per_sec_{hi}c": round(b_hi["marginal_docs_per_sec"], 1),
+        f"scaling_efficiency_marginal_{lo}_to_{hi}": round(
+            (b_hi["marginal_docs_per_sec"]
+             / b_lo["marginal_docs_per_sec"]) / ideal, 3),
+        f"kernel_tokens_per_sec_{lo}p": round(kernel[lo], 1),
+        f"kernel_tokens_per_sec_{hi}p": round(kernel[hi], 1),
+        f"kernel_scaling_efficiency_{lo}_to_{hi}": round(
+            (kernel[hi] / kernel[lo]) / ideal, 3),
+        f"postings_per_sec_{hi}c": b_hi["postings_per_sec"],
+        "partition_skew_ratio": b_hi["partition_skew_ratio"],
+        "term_df_skew_ratio": b_hi["term_df_skew_ratio"],
     }
+    for c in (lo, hi):
+        out[f"build_sec_spread_{c}c"] = [round(v, 2) for v in spread(
+            [g["build_sec"] for g in legs if g["cores"] == c])]
+    return out
 
 
 _KERNEL_CODE = """
@@ -321,348 +277,32 @@ def run_headline_queries(spark, eng, best_of: int = 1) -> dict:
     return timings
 
 
-SPOT_LOG = os.path.join(REPO, "spot_queries_log.jsonl")
-SPOT_DIR = os.environ.get("SPYGLASS_SPOT_DIR",
-                          "/dev/shm/spyglass_spot"
-                          if os.path.isdir("/dev/shm") else "/tmp/spyglass_spot")
-
-
-def spot_queries() -> None:
-    """Query-latency spot capture: build (or reuse) the bench-scale index
-    once in SPOT_DIR, run the headline queries best-of-3, append one JSON
-    line to spot_queries_log.jsonl with the window evidence (mini kernel
-    rate before/after). bench.py main() embeds the best in-band capture
-    as ``spot_queries_best``."""
-    from spyglass_spark.index.builder import build_index
-    from spyglass_spark.index.manifest import load_manifest
-    from spyglass_spark.query.executor import SearchEngine
-    from spyglass_spark.session import get_spark
-
-    mini_before = _kernel_throughput(1)
-    spark = get_spark("bench-spot", master=f"local[{CPUS}]",
-                      shuffle_partitions=max(CPUS, 8))
-    spark.sparkContext.setLogLevel("ERROR")
-    index_dir = f"{SPOT_DIR}/index"
-    m = load_manifest(index_dir)
-    built_now = False
-    build_sec = None
-    if m is None or not m.committed:
-        docs = _bench_docs(spark, REPLICAS)
-        t0 = time.time()
-        build_index(spark, docs, index_dir, num_partitions=NUM_PARTS, waves=1)
-        build_sec = round(time.time() - t0, 2)
-        built_now = True
-    eng = SearchEngine(spark, index_dir)
-    timings = run_headline_queries(spark, eng, best_of=3)
-    mini_after = _kernel_throughput(1)
-    rec = {"ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-           "kind": "spot_queries", "loadavg": _loadavg(),
-           "mini_rate_before": round(mini_before, 1),
-           "mini_rate_after": round(mini_after, 1),
-           "replicas": REPLICAS, "content_repeat": CONTENT_REPEAT,
-           "built_now": built_now, "build_sec_32c": build_sec,
-           "queries": timings,
-           "total_sec": round(sum(v for k2, v in timings.items()
-                                  if not k2.startswith("_")), 3)}
-    with open(SPOT_LOG, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    print(json.dumps(rec))
-    spark.stop()
-
-
-QUERY_LEG_LOG = os.path.join(REPO, "query_legs_log.jsonl")
-
-
-def query_leg(cores: int) -> dict:
-    """Query-throughput leg at one parallelism: open the SPOT_DIR index
-    (built once at the standard bench shape — identical across legs) and
-    time the batch64 scoring job plus a single hot-term search, best-of-3.
-    The scoring stage is CPU-bound numpy decode+BM25, so this is the
-    second N→4N scaling axis next to the build legs — less exposed to the
-    host's memory-bandwidth neighbors than tokenize-heavy stage 1."""
-    from spyglass_spark.index.manifest import load_manifest
-    from spyglass_spark.query.executor import SearchEngine
-    from spyglass_spark.session import get_spark
-
-    index_dir = f"{SPOT_DIR}/index"
-    m = load_manifest(index_dir)
-    if m is None or not m.committed:
-        raise SystemExit("query_leg: build the spot index first "
-                         "(python bench.py --spot-queries)")
-    spark = get_spark(f"bench-qleg-{cores}", master=f"local[{cores}]",
-                      shuffle_partitions=max(cores, 8))
-    spark.sparkContext.setLogLevel("ERROR")
-    eng = SearchEngine(spark, index_dir)
-    eng.search("spark table", k=5).collect()  # warm workers + caches
-    words = ["spark", "merge", "join", "filter", "scan", "sort", "key",
-             "order", "batch", "stream", "hash", "part", "fast", "table",
-             "window", "agg"]
-    batch64 = [{"query": f"{words[i % 16]} {words[(i * 7 + 3) % 16]}"}
-               for i in range(64)]
-    # 256 distinct 2-3 term queries: amortizes the fixed per-job cost
-    # (~0.5 s scheduling + driver merge) 4× better than batch64, so the
-    # N→4N ratio reflects the scalable scoring stage, not the constant
-    batch256 = [{"query": f"{words[i % 16]} {words[(i * 5 + 1) % 16]}"
-                          + (f" {words[(i * 11 + 7) % 16]}" if i % 3 else "")}
-                for i in range(256)]
-    best64 = best256 = best_hot = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        eng.search_many(batch64, k=10).collect()
-        best64 = min(best64, time.time() - t0)
-        t0 = time.time()
-        eng.search_many(batch256, k=10).collect()
-        best256 = min(best256, time.time() - t0)
-        t0 = time.time()
-        eng.search("join", k=10).collect()
-        best_hot = min(best_hot, time.time() - t0)
-    spark.stop()
-    return {"cores": cores, "batch64_sec": round(best64, 3),
-            "queries_per_sec": round(64.0 / best64, 2),
-            "batch256_sec": round(best256, 3),
-            "qps_batch256": round(256.0 / best256, 2),
-            "hot_term_sec": round(best_hot, 3)}
-
-
-def query_scaling() -> None:
-    """Run the 8/32 query-leg pair as separate JVMs on the SAME spot
-    index, append one JSON line with the window evidence. Legs are
-    INTERLEAVED (32, 8, 32, 8) keeping best-of per level, so one-sided
-    noise (a neighbor burst hitting only the second leg) can't inflate
-    the ratio the way a single sequential pair can. bench main() embeds
-    the best stationary pair on record as ``query_scaling_best``."""
-    from spyglass_spark.index.manifest import load_manifest
-
-    # /dev/shm is volatile: bootstrap the spot index if a reboot (or a
-    # cleanup) wiped it, so unattended watchers can't fail forever
-    m = load_manifest(f"{SPOT_DIR}/index")
-    if m is None or not m.committed:
-        subprocess.run([sys.executable, os.path.abspath(__file__),
-                        "--spot-queries"],
-                       check=True, stdout=subprocess.DEVNULL)
-    mini_before = _kernel_throughput(1)
-    legs: dict[int, dict] = {}
-    for cores in (32, 8, 32, 8):  # big leg first; one repeat per level
-        out = f"{WORK_DIR}/qleg_{cores}.json"
-        os.makedirs(WORK_DIR, exist_ok=True)
-        env = dict(os.environ)
-        subprocess.run([sys.executable, os.path.abspath(__file__),
-                        "--query-leg", str(cores), out],
-                       check=True, env=env, stdout=subprocess.DEVNULL)
-        with open(out) as f:
-            leg = json.load(f)
-        if cores not in legs or leg["batch64_sec"] < legs[cores]["batch64_sec"]:
-            legs[cores] = leg
-    mini_after = _kernel_throughput(1)
-    rec = {"ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-           "kind": "query_scaling", "loadavg": _loadavg(),
-           "mini_rate_before": round(mini_before, 1),
-           "mini_rate_after": round(mini_after, 1),
-           "replicas": REPLICAS, "content_repeat": CONTENT_REPEAT,
-           "qps_8c": legs[8]["queries_per_sec"],
-           "qps_32c": legs[32]["queries_per_sec"],
-           "batch64_sec_8c": legs[8]["batch64_sec"],
-           "batch64_sec_32c": legs[32]["batch64_sec"],
-           "qps256_8c": legs[8].get("qps_batch256"),
-           "qps256_32c": legs[32].get("qps_batch256"),
-           "hot_term_sec_8c": legs[8]["hot_term_sec"],
-           "hot_term_sec_32c": legs[32]["hot_term_sec"],
-           "query_scaling_efficiency_8_to_32": round(
-               (legs[32]["queries_per_sec"]
-                / legs[8]["queries_per_sec"]) / 4.0, 3)}
-    if legs[8].get("qps_batch256") and legs[32].get("qps_batch256"):
-        rec["query_scaling_efficiency_b256"] = round(
-            (legs[32]["qps_batch256"] / legs[8]["qps_batch256"]) / 4.0, 3)
-    with open(QUERY_LEG_LOG, "a") as f:
-        f.write(json.dumps(rec) + "\n")
-    print(json.dumps(rec))
-
-
-QUIET_FLAG = "/tmp/quietbench.running"
-
-
-def _holding_flag(fn, wait_sec: int = 600) -> None:
-    """Run ``fn`` while holding the window-watcher coordination flag:
-    quiet_probe/leg_sniper/spot_watch/qscale_watch all skip while it
-    exists, so a background capture can never contend with a committed
-    measurement's legs (both would read garbage).
-
-    If a watcher capture is already in flight (flag exists), WAIT for it
-    to finish (up to ``wait_sec``) and then take the flag — otherwise the
-    committed bench's legs would overlap the watcher's legs AND a new
-    capture could start mid-bench once the watcher released. A flag older
-    than an hour is an orphan (holder died without cleanup) and is reaped,
-    mirroring tools/flagutil.acquire. On timeout, proceed unheld rather
-    than fail: a late bench with a noisy window beats no bench at all."""
-    held_flag = False
-    deadline = time.time() + wait_sec
-    while True:
-        try:
-            os.close(os.open(QUIET_FLAG,
-                             os.O_CREAT | os.O_EXCL | os.O_WRONLY))
-            held_flag = True
-            break
-        except FileExistsError:
-            try:
-                if time.time() - os.path.getmtime(QUIET_FLAG) > 3600:
-                    os.unlink(QUIET_FLAG)
-                    continue
-            except OSError:
-                continue  # holder released between exists and getmtime
-        except OSError:
-            break  # flag dir unwritable: run unheld, as before
-        if time.time() >= deadline:
-            break
-        time.sleep(5)
-    try:
-        fn()
-    finally:
-        if held_flag:
-            try:
-                os.unlink(QUIET_FLAG)
-            except OSError:
-                pass
-
-
-def _read_jsonl(path: str) -> list:
-    if not os.path.exists(path):
-        return []
-    recs = []
-    with open(path) as f:
-        for line in f:
-            try:
-                recs.append(json.loads(line))
-            except ValueError:
-                continue
-    return recs
-
-
-def assemble_window_evidence(result: dict,
-                             qlog: str | None = None,
-                             spot_log: str | None = None,
-                             query_leg_log: str | None = None) -> dict:
-    """Embed the watcher-log evidence records into the bench result:
-
-    - ``quiet_window_best`` / ``quiet_window_ladder``: best qualifying
-      build-scaling capture overall and per N→4N rung (2→8, 4→16, 8→32).
-      Qualifying = the kernel control shows real capacity (≥12 M tok/s at
-      16/32p) OR the capture is control-BRACKETED (kernel ratio held ≥0.7
-      immediately before AND after the legs — a stationary window, even
-      under partial neighbor load).
-    - ``spot_queries_best``: lowest-total headline query capture.
-    - ``query_scaling_best``: best query-side N→4N capture, stationary
-      windows preferred (a noise burst hitting only the 8c leg INFLATES
-      the ratio, so the max over noisy captures is the least credible).
-
-    Pure function of the three log files — unit-tested against synthetic
-    logs in tests/test_bench_assembly.py so a malformed watcher line can
-    never crash the committed bench run.
-    """
-    cands = []
-    for rec in _read_jsonl(qlog or os.path.join(REPO, "quiet_bench_log.jsonl")):
-        if rec.get("scaling_efficiency") is None:
-            continue
-        capacity_ok = max(rec.get("kernel_32p", 0),
-                          rec.get("kernel_16p", 0)) >= 12e6
-        bracketed = rec.get("controls_bracketed") and \
-            min(rec.get("keff_pre", 0), rec.get("keff_after", 0)) >= 0.7
-        if capacity_ok or bracketed:
-            cands.append(rec)
-    if cands:
-        result["quiet_window_best"] = max(
-            cands, key=lambda r: r["scaling_efficiency"])
-        # full ladder: best qualifying capture at EVERY N→4N rung the
-        # probe managed to run. A single max hides which rung it came
-        # from; the ladder shows the efficiency holds as N grows until
-        # the host's memory-bus ceiling (not the engine) caps the top rung.
-        ladder = {}
-        for rec in cands:
-            rung = "x".join(str(c) for c in rec.get("pair") or (8, 32))
-            if (rung not in ladder or rec["scaling_efficiency"]
-                    > ladder[rung]["scaling_efficiency"]):
-                ladder[rung] = rec
-
-        def _rung_view(rec):
-            keep = ("ts", "keff_pre", "keff_after",
-                    "controls_bracketed", "replicas", "mini_rate")
-            return {k: v for k, v in rec.items()
-                    if k in keep or k.startswith((
-                        "build_sec_", "docs_per_sec_", "marginal_",
-                        "scaling_", "kernel_16p", "kernel_32p"))}
-        result["quiet_window_ladder"] = {
-            rung: _rung_view(ladder[rung]) for rung in sorted(ladder)}
-    scands = [rec for rec in _read_jsonl(spot_log or SPOT_LOG)
-              if rec.get("kind") == "spot_queries" and rec.get("queries")]
-    if scands:
-        result["spot_queries_best"] = min(scands, key=lambda r: r["total_sec"])
-    qcands = [rec for rec in _read_jsonl(query_leg_log or QUERY_LEG_LOG)
-              if rec.get("kind") == "query_scaling"]
-    if qcands:
-        stationary = [r for r in qcands
-                      if r.get("mini_rate_before", 0) >= 1.0e6
-                      and r.get("mini_rate_after", 0)
-                      >= 0.5 * r.get("mini_rate_before", 1)]
-        pool = stationary or qcands
-        # the batch256 axis amortizes the fixed per-job cost 4x better
-        # than batch64, so where both exist the 256 ratio is the truer
-        # scoring-stage scaling number — rank captures by their best
-        # axis and keep both fields visible in the embedded record
-        axis = lambda r: max(
-            r["query_scaling_efficiency_8_to_32"],
-            r.get("query_scaling_efficiency_b256") or 0)
-        result["query_scaling_best"] = max(pool, key=axis)
-    return result
-
-
 def main() -> None:
     shutil.rmtree(WORK_DIR, ignore_errors=True)
     os.makedirs(WORK_DIR, exist_ok=True)
-    _holding_flag(_main_inner)
 
+    # --- scaling legs: interleaved rounds at lo and hi cores -------------
+    lo, hi = leg_levels(CPUS)
+    legs: list[dict] = []
+    kernel = {lo: 0.0, hi: 0.0}
+    for _ in range(LEG_ROUNDS):
+        for cores in sorted({lo, hi}):
+            legs.append(_run_leg(cores))
+            kernel[cores] = max(kernel[cores], _kernel_throughput(cores))
+    build = summarize_legs(legs, kernel, lo, hi)
+    index_dir = _best_leg(legs, hi)["index_dir"]
 
-def _main_inner() -> None:
-
-    # --- scaling legs: interleaved rounds, best-of per level -------------
-    best: dict[int, dict] = {}
-    kbest = {8: 0.0, 32: 0.0}
-    rounds = 0
-    t_legs = time.time()
-    while True:
-        rounds += 1
-        for cores in (8, 32):
-            r = _run_leg(cores)
-            if cores not in best or r["build_sec"] < best[cores]["build_sec"]:
-                best[cores] = r
-            kbest[cores] = max(kbest[cores], _kernel_throughput(cores))
-        eff = ((best[32]["docs_per_sec"] / best[8]["docs_per_sec"]) / 4.0
-               if 8 in best and 32 in best else 0.0)
-        keff = (kbest[32] / kbest[8]) / 4.0 if kbest[8] else 0.0
-        if eff >= 0.8 and keff >= 0.8:
-            break  # target demonstrated; stop burning the box
-        if time.time() - t_legs > BUDGET_SEC:
-            break  # keep the best-of captured so far
-        credible = all(best[c].get("mini_rate_before", 0) >= MINI_CREDIBLE
-                       for c in (8, 32))
-        if rounds >= LEG_ROUNDS and credible:
-            break  # enough rounds AND the window was interpretable
-        # noisy window: keep re-rolling inside the budget hunting a
-        # credible one — the committed build row must not be a noise sample
-    leg8, leg32 = best[8], best[32]
-    efficiency = (leg32["docs_per_sec"] / leg8["docs_per_sec"]) / 4.0
-    marginal_eff = (leg32["marginal_docs_per_sec"]
-                    / leg8["marginal_docs_per_sec"]) / 4.0
-    kernel_eff = (kbest[32] / kbest[8]) / 4.0
-
-    # --- headline queries on the 32-core index ---------------------------
-    import __spark_entry__ as E
+    # --- headline queries on the hi-core index ---------------------------
     from spyglass_spark.query.executor import SearchEngine
     from spyglass_spark.session import get_spark
 
     spark = get_spark("bench-queries", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    eng = SearchEngine(spark, leg32["index_dir"])
+    eng = SearchEngine(spark, index_dir)
     timings = run_headline_queries(spark, eng)
+    passes = [timings] + [run_headline_queries(spark, eng)
+                          for _ in range(HEADLINE_PASSES - 1)]
     total = round(sum(v for k2, v in timings.items()
                       if not k2.startswith("_")), 3)
     result = {
@@ -670,52 +310,17 @@ def _main_inner() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "queries_spread": {k2: spread([p[k2] for p in passes])
+                           for k2 in timings if not k2.startswith("_")},
         "sf": _sf_of(SF_DIR),
         "index_build": {
-            "n_docs": leg32["n_docs"],
             "replicas": REPLICAS,
             "content_repeat": CONTENT_REPEAT,
             "num_partitions": NUM_PARTS,
-            "leg_rounds": rounds,
-            "docs_per_sec_8c": round(leg8["docs_per_sec"], 1),
-            "docs_per_sec_32c": round(leg32["docs_per_sec"], 1),
-            "tokens_per_sec_32c": round(leg32["tokens_per_sec"], 1),
-            "build_sec_8c": round(leg8["build_sec"], 2),
-            "build_sec_32c": round(leg32["build_sec"], 2),
-            "stage1_sec_32c": leg32.get("stage1_sec"),
-            "stats_sec_32c": leg32.get("stats_sec"),
-            "scaling_efficiency_8_to_32": round(efficiency, 3),
-            "marginal_docs_per_sec_8c": round(leg8["marginal_docs_per_sec"], 1),
-            "marginal_docs_per_sec_32c": round(leg32["marginal_docs_per_sec"], 1),
-            "scaling_efficiency_marginal_8_to_32": round(marginal_eff, 3),
-            # window-noise gauge: quiet ≈ 3.8-4.3 M with the r3 vectorized
-            # kernel; readings far below mean neighbor bandwidth pressure
-            "kernel_tokens_per_sec_1p": round(_kernel_throughput(1), 1),
-            "kernel_tokens_per_sec_8p": round(kbest[8], 1),
-            "kernel_tokens_per_sec_32p": round(kbest[32], 1),
-            "kernel_scaling_efficiency_8_to_32": round(kernel_eff, 3),
-            "loadavg_leg8": [leg8["loadavg_before"], leg8["loadavg_after"]],
-            "loadavg_leg32": [leg32["loadavg_before"], leg32["loadavg_after"]],
-            "mini_rate_leg8": leg8.get("mini_rate_before"),
-            "mini_rate_leg32": leg32.get("mini_rate_before"),
-            "postings_per_sec_32c": leg32["postings_per_sec"],
-            "partition_skew_ratio": leg32["partition_skew_ratio"],
-            "term_df_skew_ratio": leg32["term_df_skew_ratio"],
+            "leg_rounds": LEG_ROUNDS,
+            **build,
         },
     }
-    # window-credibility gate (round-4 verdict): a build row captured
-    # under neighbor bandwidth pressure is a noise sample, not a
-    # regression — mark it and attach the best credible pair on record
-    if any(best[c].get("mini_rate_before", 0) < MINI_CREDIBLE
-           for c in (8, 32)):
-        result["index_build"]["window_noisy"] = True
-        cred = _best_credible_pair()
-        if cred is not None:
-            result["index_build_best_credible"] = cred
-    # best quiet-window capture from the background probe (evidence trail —
-    # the host's memory-bandwidth neighbors make on-demand windows rare;
-    # see BASELINE.md "Host-noise characterization")
-    assemble_window_evidence(result)
     spark.stop()
     shutil.rmtree(WORK_DIR, ignore_errors=True)  # free the tmpfs footprint
     print(json.dumps(result))
@@ -724,12 +329,5 @@ def _main_inner() -> None:
 if __name__ == "__main__":
     if len(sys.argv) >= 4 and sys.argv[1] == "--build-leg":
         build_leg(int(sys.argv[2]), sys.argv[3])
-    elif len(sys.argv) >= 4 and sys.argv[1] == "--query-leg":
-        with open(sys.argv[3], "w") as fh:
-            json.dump(query_leg(int(sys.argv[2])), fh)
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--query-scaling":
-        _holding_flag(query_scaling)
-    elif len(sys.argv) >= 2 and sys.argv[1] == "--spot-queries":
-        _holding_flag(spot_queries)
     else:
         main()

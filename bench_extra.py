@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Per-query isolation bench + plan capture for the optimization round.
 
-NOT the graded harness (bench.py is frozen): this file exists to
+NOT the headline harness (that is bench.py): this file exists to
   - time each headline query in isolation (best-of-N, labeled jobs),
   - dump .explain("formatted") for the declared entry queries to
     plans/r06/<name>_{before|after}.txt,
@@ -13,8 +13,9 @@ Usage:
   python bench_extra.py --queries [N]        # headline latencies, best-of-N
   python bench_extra.py --plans LABEL q1 q2  # dump plans/r06/<q>_<LABEL>.txt
   python bench_extra.py --noop N q1 q2       # noop-sink timing for entries
-The spot index in /dev/shm/spyglass_spot is built on demand (identical
-shape to bench.py's: REPLICAS x CONTENT_REPEAT at NUM_PARTS parts).
+The spot index in SPOT_DIR (default /dev/shm/spyglass_spot, or
+$SPYGLASS_SPOT_DIR) is built on demand (identical shape to bench.py's:
+REPLICAS x CONTENT_REPEAT at NUM_PARTS parts).
 """
 
 from __future__ import annotations
@@ -28,7 +29,10 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+SPOT_DIR = os.environ.get("SPYGLASS_SPOT_DIR",
+                          "/dev/shm/spyglass_spot"
+                          if os.path.isdir("/dev/shm") else "/tmp/spyglass_spot")
 PLANS_DIR = os.path.join(REPO, "plans", "r06")
 
 ENTRY_QUERIES = ("bm25_sql_oracle_form", "dedup_minhash_lsh",
@@ -45,7 +49,7 @@ def _spot_engine():
     spark = get_spark("bench-extra", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    index_dir = f"{B.SPOT_DIR}/index"
+    index_dir = f"{SPOT_DIR}/index"
     m = load_manifest(index_dir)
     if m is None or not m.committed:
         docs = B._bench_docs(spark, B.REPLICAS)

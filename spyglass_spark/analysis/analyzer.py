@@ -261,18 +261,14 @@ def _ascii_runs(texts_ascii: list[str], doc_ids: np.ndarray):
     return uniq_tokens, inverse, doc_ids[doc_of], pos_of
 
 
-import os as _os
-
-_CHUNK_CHARS = int(_os.environ.get("SPYGLASS_TOKENIZE_CHUNK_CHARS", 2 << 20))
+# ~2 MB of text per chunk — keeps the vectorized temporaries (keys,
+# factorize table, masks) cache-resident; one giant batch goes
+# memory-bandwidth-bound and loses the vectorization win. Callers that
+# need another size pass ``tokenize_arrays(chunk_chars=...)``.
+_CHUNK_CHARS = 2 << 20
 # batches whose vocab fits 16 bits use uint16 sort keys (2 radix passes,
 # half the key-gather bytes); wide-vocab batches keep uint32
 _NARROW_VOCAB_MAX = 1 << 16
-# ~2 MB of text per chunk — keeps the vectorized temporaries (keys,
-# factorize table, masks) cache-resident; one giant batch goes
-# memory-bandwidth-bound and loses the vectorization win on this host
-# (see CLAUDE.md: noise here IS memory bandwidth). Env-tunable for
-# scaling experiments: at high core counts a chunk that fits the PRIVATE
-# L2 avoids shared LLC/DRAM contention.
 
 
 def _chunk_rows(chunk: list[str], first_doc: int, kind: str, gdict: dict):

@@ -15,9 +15,12 @@ so every operator has an exact cross-engine oracle.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, functions as F
+
+_log = logging.getLogger(__name__)
 
 TOKEN_SPLIT = "[^a-z0-9]+"
 
@@ -72,8 +75,9 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
         est_splits = max(len(files), total // (128 << 20))
         if total >= (8 << 20) and est_splits < sc.defaultParallelism:
             df = df.repartition(sc.defaultParallelism)
-    except Exception:
-        pass
+    except Exception as e:
+        _log.warning("minhash input-size probe (minhash_signatures) "
+                     "failed; the input is not respread: %s", e)
     sh = _gram_explode(df, text_col, id_col, ngram)
     aggs = [F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("shingle")))).alias(f"mh{i}")
             for i in range(num_perms)]

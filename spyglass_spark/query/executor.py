@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import inspect
 import logging
+import os
 import time
 from collections import defaultdict
 from functools import reduce
@@ -91,23 +92,18 @@ TOMBSTONE_SHIP_MAX = 1_000_000
 # at bench-scale 2.5k-doc parts WAND costs ~20% extra, on 100 TB parts it
 # prunes). Results are bitwise identical either way (WAND is a pruning
 # strategy only — pinned by tests/test_wand.py auto≡exhaustive).
-import os as _os
-
-WAND_MIN_PART_ROWS = int(_os.environ.get("SPYGLASS_WAND_MIN_ROWS", "131072"))
+WAND_MIN_PART_ROWS = 131_072
 # Driver-local execution gates (see _execute_compiled): a batch runs on
 # the driver — same kernel, pyarrow posting read, zero Spark jobs — only
 # when ALL of: ≤ LOCAL_EXEC_MAX_QUERIES queries, the estimated decode
 # volume (Σ global df, phrase members ×4) ≤ LOCAL_EXEC_MAX_ROWS, and the
 # index has ≤ LOCAL_EXEC_MAX_PARTS partitions (per-file footer metadata
-# is driver-side work). Mode: auto | never | always (tests use
-# never/always to pin both paths bitwise-identical).
-LOCAL_EXEC_MODE = _os.environ.get("SPYGLASS_LOCAL_EXEC", "auto")
-LOCAL_EXEC_MAX_ROWS = int(_os.environ.get("SPYGLASS_LOCAL_EXEC_ROWS",
-                                          str(4_000_000)))
-LOCAL_EXEC_MAX_QUERIES = int(_os.environ.get("SPYGLASS_LOCAL_EXEC_QUERIES",
-                                             "2"))
-LOCAL_EXEC_MAX_PARTS = int(_os.environ.get("SPYGLASS_LOCAL_EXEC_PARTS",
-                                           "1024"))
+# is driver-side work). Mode (SPYGLASS_LOCAL_EXEC): auto | never | always
+# (tests and tools use never/always to pin both paths bitwise-identical).
+LOCAL_EXEC_MODE = os.environ.get("SPYGLASS_LOCAL_EXEC", "auto")
+LOCAL_EXEC_MAX_ROWS = 4_000_000
+LOCAL_EXEC_MAX_QUERIES = 2
+LOCAL_EXEC_MAX_PARTS = 1024
 
 
 def search_union(engines, query, filters=(), boosts=(),
@@ -927,8 +923,6 @@ class SearchEngine:
         data is already co-located on disk). Falls back to the shuffled
         path automatically when a part's postings outgrow the bound (the
         100 TB regime with huge parts)."""
-        import os
-
         try:
             max_bytes = int(self.spark.conf.get(
                 "spark.sql.files.maxPartitionBytes", str(128 << 20)))
@@ -1007,13 +1001,15 @@ class SearchEngine:
 
         Pattern shapes batch too: a dict may carry ``prefix`` /
         ``wildcard`` / ``regex`` / ``fuzzy`` (optionally
-        ``fuzzy_distance``, ``max_expansions``) / ``term_range``
-        (a (lower, upper) pair, optionally ``include_lower`` /
-        ``include_upper``) / ``term_set`` (an iterable of exact
-        terms) instead of ``query`` —
-        the expansion is the same driver-side metadata-plane read the
-        single-query methods use, so a mixed batch of N queries still
-        costs exactly ONE scoring job.
+        ``fuzzy_distance``) / ``term_range`` (a (lower, upper) pair,
+        optionally ``include_lower`` / ``include_upper``) /
+        ``term_set`` (an iterable of exact terms) / ``phrase_prefix``
+        instead of ``query``, each optionally with ``max_expansions``
+        and ``fields`` (default ``EXPAND_FIELDS``). The expansion is a
+        driver-side metadata-plane read, and the single-query pattern
+        methods (``search_prefix`` …) are one-entry calls of this path,
+        so a mixed batch of N queries still costs exactly ONE scoring
+        job.
 
         Per-batch metadata (num_docs, term_counts, wall_time_ms — the
         SearchResults.meta analog, api/handler/search.rs:190-211) is left
@@ -1073,6 +1069,7 @@ class SearchEngine:
         if "query" in q:
             return (compile_query(q["query"], filters, boosts), q["query"])
         cap = q.get("max_expansions", DEFAULT_MAX_EXPANSIONS)
+        fields = q.get("fields", self.EXPAND_FIELDS)
         stats = self._paths("term_stats")
         if "prefix" in q:
             norm = normalize_pattern(q["prefix"])
@@ -1103,7 +1100,8 @@ class SearchEngine:
             inc_hi = q.get("include_upper", False)
             expand = (lambda f: expand_term_range(stats, f, lo, hi,
                                                   inc_lo, inc_hi, cap))
-            label = f"term_range:{lo},{hi}"
+            label = (f"term_range:{'[' if inc_lo else '('}{lo},{hi}"
+                     f"{']' if inc_hi else ')'}")
         elif "term_set" in q:
             ts = tuple(q["term_set"])
             expand = (lambda f: expand_term_set(stats, f, ts, cap))
@@ -1129,7 +1127,7 @@ class SearchEngine:
             norm = normalize_pattern(raw_prefix)
             per_field = {f: [t for t, _ in expand_prefix(stats, f, norm,
                                                          cap)]
-                         for f in self.EXPAND_FIELDS} if norm else {}
+                         for f in fields} if norm else {}
             return (compile_phrase_prefix(fixed, per_field,
                                           filters=filters, boosts=boosts),
                     f"phrase_prefix:{q['phrase_prefix']}")
@@ -1138,8 +1136,7 @@ class SearchEngine:
                 "batch entry needs one of query/prefix/wildcard/regex/"
                 "fuzzy/term_range/term_set/phrase_prefix/parsed: "
                 f"{sorted(q)}")
-        per_field = {f: [t for t, _ in expand(f)]
-                     for f in self.EXPAND_FIELDS}
+        per_field = {f: [t for t, _ in expand(f)] for f in fields}
         return (compile_expanded(per_field, filters=filters,
                                  boosts=boosts), label)
 
@@ -1189,16 +1186,11 @@ class SearchEngine:
         composes: ``search_after`` is the same (score, doc_ord) cursor as
         ``search`` (the expansion is deterministic per commit, so every
         page scores the identical Should group)."""
-        norm = normalize_pattern(pattern)
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_prefix(stats, f, norm,
-                                                     max_expansions)]
-                     for f in fields} if norm else {}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        return self._run_compiled_batch(
-            [cq], [f"prefix:{pattern}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"prefix": pattern, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_phrase_prefix(self, query: str, k: int = 5, offset: int = 0,
                              fields: tuple = EXPAND_FIELDS,
@@ -1214,20 +1206,11 @@ class SearchEngine:
         term_stats range read as search_prefix — one scoring Spark job;
         paging via ``offset``/``search_after`` composes as in
         ``search``."""
-        from .compiler import compile_phrase_prefix, split_phrase_prefix
-
-        fixed, raw_prefix = split_phrase_prefix(query)
-        norm = normalize_pattern(raw_prefix)
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_prefix(stats, f, norm,
-                                                     max_expansions)]
-                     for f in fields} if norm else {}
-        self.last_expansion = per_field
-        cq = compile_phrase_prefix(fixed, per_field, filters=filters,
-                                   boosts=boosts)
-        return self._run_compiled_batch(
-            [cq], [f"phrase_prefix:{query}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"phrase_prefix": query, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_fuzzy(self, term: str, distance: int = 1, k: int = 5,
                      offset: int = 0, fields: tuple = EXPAND_FIELDS,
@@ -1238,18 +1221,11 @@ class SearchEngine:
         pattern, via the SymSpell sidecar when present (ensure with
         ``ensure_fuzzy_dict``) and a dictionary-slice verify otherwise.
         ``search_after`` pages exactly as in ``search``."""
-        norm = normalize_pattern(term)
-        stats = self._paths("term_stats")
-        fuzzy = self._fuzzy_dict_paths()
-        per_field = {f: [t for t, _ in expand_fuzzy(
-                         stats, f, norm, distance, max_expansions,
-                         fuzzy_paths=fuzzy)]
-                     for f in fields} if norm else {}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        return self._run_compiled_batch(
-            [cq], [f"fuzzy:{term}~{distance}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"fuzzy": term, "fuzzy_distance": distance, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_wildcard(self, pattern: str, k: int = 5, offset: int = 0,
                         fields: tuple = EXPAND_FIELDS,
@@ -1263,16 +1239,11 @@ class SearchEngine:
         metacharacter; a leading-wildcard pattern scans the field's
         dictionary slice (linear in vocabulary, documented). Paging via
         ``offset``/``search_after`` composes exactly as in ``search``."""
-        norm = normalize_wildcard(pattern)
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_wildcard(stats, f, norm,
-                                                       max_expansions)]
-                     for f in fields} if norm else {}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        return self._run_compiled_batch(
-            [cq], [f"wildcard:{pattern}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"wildcard": pattern, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_term_range(self, lower: str | None = None,
                           upper: str | None = None,
@@ -1295,18 +1266,13 @@ class SearchEngine:
         documented family contract, expand.py module docstring). Paging
         via ``offset``/``search_after`` composes exactly as in
         ``search``."""
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_term_range(
-                         stats, f, lower, upper, include_lower,
-                         include_upper, max_expansions)]
-                     for f in fields}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        lb = "[" if include_lower else "("
-        ub = "]" if include_upper else ")"
-        return self._run_compiled_batch(
-            [cq], [f"term_range:{lb}{lower},{upper}{ub}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"term_range": (lower, upper),
+              "include_lower": include_lower,
+              "include_upper": include_upper, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_term_set(self, terms, k: int = 5, offset: int = 0,
                         fields: tuple = EXPAND_FIELDS,
@@ -1322,16 +1288,11 @@ class SearchEngine:
         1.0; as with every pattern shape here the match SET is identical
         and ordering is the deterministic df-ranked BM25 Should group
         (expand.py family contract). Paging composes as in ``search``."""
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_term_set(
-                         stats, f, terms, max_expansions)]
-                     for f in fields}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        label = "term_set:" + ",".join(sorted(map(str, terms))[:8])
-        return self._run_compiled_batch(
-            [cq], [label], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"term_set": terms, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_regex(self, pattern: str, k: int = 5, offset: int = 0,
                      fields: tuple = EXPAND_FIELDS,
@@ -1345,15 +1306,11 @@ class SearchEngine:
         RegexpQuery behaves identically). Range-pruned when
         ``regex_literal_prefix`` extracts a safe literal run; otherwise
         the field's dictionary slice is scanned (vocab-scale)."""
-        stats = self._paths("term_stats")
-        per_field = {f: [t for t, _ in expand_regex(stats, f, pattern,
-                                                    max_expansions)]
-                     for f in fields} if pattern else {}
-        self.last_expansion = per_field
-        cq = compile_expanded(per_field, filters=filters, boosts=boosts)
-        return self._run_compiled_batch(
-            [cq], [f"regex:{pattern}"], k, offset, algo,
-            afters=[search_after]).drop("query_id")
+        return self.search_many(
+            [{"regex": pattern, "fields": fields,
+              "max_expansions": max_expansions, "filters": filters,
+              "boosts": boosts, "after": search_after}],
+            k=k, offset=offset, algo=algo).drop("query_id")
 
     def search_parsed(self, query: str, filters=(), boosts=(), k: int = 5,
                       offset: int = 0, algo: str = "auto",
@@ -1376,8 +1333,6 @@ class SearchEngine:
             k=k, offset=offset, algo=algo).drop("query_id")
 
     def _fuzzy_dict_paths(self) -> list[str] | None:
-        import os
-
         from ..index.fuzzy_dict import fuzzy_dict_path
         p = fuzzy_dict_path(self.index_dir, self.manifest.commit_seq)
         return [p] if os.path.exists(os.path.join(p, "_SUCCESS")) else None

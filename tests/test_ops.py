@@ -721,3 +721,29 @@ def test_c4_line_clean_terminal_punct_and_plan(spark):
     plan = (c4_line_clean(df, "text", "doc_id")
             ._jdf.queryExecution().executedPlan().toString())
     assert "EvalPython" not in plan
+
+
+def test_minhash_size_probe_failure_is_logged(spark, docs_df, tmp_path,
+                                               monkeypatch, caplog):
+    """A failing input-size probe (e.g. a non-local path, where
+    os.path.getsize raises) logs a warning naming the probe and keeps
+    the un-respread plan and its signatures."""
+    import logging
+
+    from spyglass_spark.ops import dedup
+
+    path = str(tmp_path / "docs")
+    docs_df.write.parquet(path)
+    df = spark.read.parquet(path)
+    want = sorted(dedup.minhash_signatures(df, "text", "doc_id").collect())
+
+    def no_size(_):
+        raise OSError("size unavailable")
+
+    monkeypatch.setattr(dedup.os.path, "getsize", no_size)
+    with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+        got = sorted(dedup.minhash_signatures(df, "text", "doc_id").collect())
+    assert got == want
+    assert any("minhash input-size probe" in r.getMessage()
+               and "size unavailable" in r.getMessage()
+               for r in caplog.records)
