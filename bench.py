@@ -126,7 +126,8 @@ def build_leg(cores: int, out_path: str) -> None:
     t0 = time.time()
     m = build_index(spark, docs, index_dir, num_partitions=NUM_PARTS, waves=1)
     elapsed = time.time() - t0
-    marginal = (m.num_docs - m_small.num_docs) / max(elapsed - small_sec, 1e-9)
+    marginal = marginal_rate(m.num_docs - m_small.num_docs,
+                             elapsed - small_sec)
     with open(out_path, "w") as f:
         json.dump({"cores": cores, "n_docs": m.num_docs, "build_sec": elapsed,
                    "docs_per_sec": m.num_docs / elapsed,
@@ -140,6 +141,15 @@ def build_leg(cores: int, out_path: str) -> None:
                    "term_df_skew_ratio": m.metrics.get("term_df_skew_ratio"),
                    "index_dir": index_dir}, f)
     spark.stop()
+
+
+def marginal_rate(extra_docs: int, extra_sec: float) -> float | None:
+    """Docs/sec of the full build beyond the small one; None when it is
+    not measurable: the two builds index the same docs, or the full
+    build was no slower than the small one."""
+    if extra_docs <= 0 or extra_sec <= 0:
+        return None
+    return extra_docs / extra_sec
 
 
 def _run_leg(cores: int) -> dict:
@@ -168,13 +178,20 @@ def _best_leg(legs: list[dict], cores: int) -> dict:
                key=lambda r: r["build_sec"])
 
 
+def _round(v, digits: int):
+    return None if v is None else round(v, digits)
+
+
 def summarize_legs(legs: list[dict], kernel: dict[int, float],
                    lo: int, hi: int) -> dict:
     """Build-leg summary keyed by core count: each level keeps its
     fastest leg (by build_sec) plus the [min, median, max] build_sec
     over all its legs; ratios are divided by hi/lo so 1.0 is linear
-    scaling. ``kernel`` is the best control throughput per level."""
+    scaling, and a marginal rate that is not measurable (None, see
+    marginal_rate) makes its ratio None too. ``kernel`` is the best
+    control throughput per level."""
     b_lo, b_hi = _best_leg(legs, lo), _best_leg(legs, hi)
+    m_lo, m_hi = b_lo["marginal_docs_per_sec"], b_hi["marginal_docs_per_sec"]
     ideal = hi / lo
     out = {
         "n_docs": b_hi["n_docs"],
@@ -187,11 +204,11 @@ def summarize_legs(legs: list[dict], kernel: dict[int, float],
         f"stats_sec_{hi}c": b_hi.get("stats_sec"),
         f"scaling_efficiency_{lo}_to_{hi}": round(
             (b_hi["docs_per_sec"] / b_lo["docs_per_sec"]) / ideal, 3),
-        f"marginal_docs_per_sec_{lo}c": round(b_lo["marginal_docs_per_sec"], 1),
-        f"marginal_docs_per_sec_{hi}c": round(b_hi["marginal_docs_per_sec"], 1),
-        f"scaling_efficiency_marginal_{lo}_to_{hi}": round(
-            (b_hi["marginal_docs_per_sec"]
-             / b_lo["marginal_docs_per_sec"]) / ideal, 3),
+        f"marginal_docs_per_sec_{lo}c": _round(m_lo, 1),
+        f"marginal_docs_per_sec_{hi}c": _round(m_hi, 1),
+        f"scaling_efficiency_marginal_{lo}_to_{hi}": (
+            None if m_lo is None or m_hi is None
+            else round((m_hi / m_lo) / ideal, 3)),
         f"kernel_tokens_per_sec_{lo}p": round(kernel[lo], 1),
         f"kernel_tokens_per_sec_{hi}p": round(kernel[hi], 1),
         f"kernel_scaling_efficiency_{lo}_to_{hi}": round(

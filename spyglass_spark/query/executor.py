@@ -11,13 +11,14 @@ re-expressed Spark-first):
    term dictionary: a metadata-plane lookup, NOT a Spark job. Results are
    memoized per engine (df is an index property). N, avgdl come from the
    manifest. BM25 weights are computed once per query in float32.
-3. ONE Spark job: scan ONLY the query terms' posting chunks (field/term
-   predicate pushdown + row-group/page pruning inside each part file of
-   the kind-partitioned store; pos_bytes dropped for term-only batches),
-   ONE exchange grouping chunks by part_id, then the scoring UDF — which
-   reads its partition's fieldnorm + date fast-field arrays DIRECTLY via
-   part-pruned pyarrow with a per-worker resident cache (the tantivy
-   segment-reader pattern: no norms scan, no semijoin, no cogroup).
+3. ONE Spark job: spark.range over min(parts, defaultParallelism)
+   tasks, each scoring its share of the doc partitions with the same
+   reader and kernel as the driver-local path (_score_parts): a
+   part-pruned pyarrow read of the query terms' posting chunks (kind
+   partition + field/term/part_id row-group pruning; pos_bytes dropped
+   for term-only batches) and of the partition's fieldnorm + date
+   fast-field arrays, with a per-worker resident cache (the tantivy
+   segment-reader pattern: no Spark scan, no exchange, no semijoin).
    Scoring (BM25, positional phrases via the doc-vectorized batch counter,
    date-range masks, block-max WAND) runs vectorized per partition with
    cross-query decode caches and NO doc-level shuffle.
@@ -93,14 +94,14 @@ TOMBSTONE_SHIP_MAX = 1_000_000
 # prunes). Results are bitwise identical either way (WAND is a pruning
 # strategy only — pinned by tests/test_wand.py auto≡exhaustive).
 WAND_MIN_PART_ROWS = 131_072
-# Driver-local execution gates (see _execute_compiled): a batch runs on
-# the driver — same kernel, pyarrow posting read, zero Spark jobs — only
-# when ALL of: ≤ LOCAL_EXEC_MAX_QUERIES queries, the estimated decode
-# volume (Σ global df, phrase members ×4) ≤ LOCAL_EXEC_MAX_ROWS, and the
-# index has ≤ LOCAL_EXEC_MAX_PARTS partitions (per-file footer metadata
-# is driver-side work). Mode (SPYGLASS_LOCAL_EXEC): auto | never | always
-# (tests and tools use never/always to pin both paths bitwise-identical).
-LOCAL_EXEC_MODE = os.environ.get("SPYGLASS_LOCAL_EXEC", "auto")
+# Driver-local execution gates (SearchEngine._runs_local): a search
+# batch or a match frame runs on the driver — same reader and kernel,
+# zero Spark jobs — only when ALL of: ≤ LOCAL_EXEC_MAX_QUERIES queries,
+# the estimated decode volume (Σ global df, phrase members ×4) ≤
+# LOCAL_EXEC_MAX_ROWS, the collected result ≤ MERGE_COLLECT_MAX rows, and
+# the index has ≤ LOCAL_EXEC_MAX_PARTS partitions (per-file footer
+# metadata is driver-side work). Tests and tools pin the distributed
+# path by setting LOCAL_EXEC_MAX_PARTS to 0.
 LOCAL_EXEC_MAX_ROWS = 4_000_000
 LOCAL_EXEC_MAX_QUERIES = 2
 LOCAL_EXEC_MAX_PARTS = 1024
@@ -416,16 +417,19 @@ def _store_dataset(store_dir: str, epoch: str):
 
 
 def _local_postings(store_dirs, epoch: str, fields, terms,
-                    cols: list) -> pd.DataFrame:
-    """Driver-side pyarrow read of the posting chunks of ``fields`` ×
-    ``terms`` (kind-partition + field/term row-group pruned) — the
-    posting read of both driver-local paths (_score_local and the
-    driver-local match frame)."""
+                    cols: list, part_ids=None) -> pd.DataFrame:
+    """pyarrow read of the posting chunks of ``fields`` × ``terms`` in
+    the parts ``part_ids`` (None = every part), kind-partition and
+    field/term/part_id row-group pruned — the one posting read of
+    scoring (_score_parts, on the driver and in the distributed tasks),
+    explain and the driver-local match frame."""
     import pyarrow.dataset as pads
 
     flt = ((pads.field("kind") == KIND_POSTING)
            & pads.field("field").isin(list(fields))
            & pads.field("term").isin(list(terms)))
+    if part_ids is not None:
+        flt &= pads.field("part_id").isin(list(part_ids))
     chunks = []
     for d in store_dirs:
         tbl = _store_dataset(d, epoch).to_table(columns=cols, filter=flt)
@@ -734,6 +738,28 @@ def _score_partition(plan: dict, postings_pdf: pd.DataFrame):
         "score": np.concatenate(out_s)})
 
 
+def _score_parts(plan: dict, part_ids, fields, terms,
+                 needs_pos: bool) -> pd.DataFrame:
+    """Score every query of ``plan`` over the parts ``part_ids`` (None =
+    every part): one pyarrow read of those parts' posting chunks
+    (_local_postings), then the per-part kernel (_score_partition). The
+    body of both executors: the driver-local path calls it for all
+    parts, each distributed task for its share. Positions are decoded
+    only by phrase clauses, so term-only batches never read pos_bytes
+    (the largest payload)."""
+    cols = ["part_id", "field", "term", "df_part", "cf_part", "n_local",
+            "doc_bytes", "tf_bytes", "meta_bytes"]
+    if needs_pos:
+        cols.append("pos_bytes")
+    pdf = _local_postings(plan["store_dirs"], plan.get("store_epoch", ""),
+                          fields, terms, cols, part_ids)
+    outs = [_score_partition(plan, g)
+            for _, g in pdf.groupby("part_id", sort=True)]
+    if not outs:
+        return _score_partition(plan, pdf.iloc[0:0])
+    return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+
+
 def _match_frame_method(fn):
     """Engine method of a match-frame kind ``fn`` (aggs.AGGS): build the
     query's match frame with ``_match_doc_meta``, call ``fn`` on it. The
@@ -828,7 +854,6 @@ class SearchEngine:
                                  for g in self.gens)
         self._store_epoch = f"{m.created_utc}#{getattr(m, 'commit_seq', 0)}"
         self._tomb_cache = None
-        self._scan_aligned = self._compute_scan_aligned()
         self._prewarm_session()
         self._prewarm_local_exec()
 
@@ -880,14 +905,11 @@ class SearchEngine:
         """Open-time warm-up of the driver-local executor's metadata
         plane (the tantivy open-segment-readers analog): pyarrow dataset
         handles, the part→fragment map, and — when the whole norm/fast
-        plane is small — the per-part norm arrays. All bounded by the
-        LOCAL_EXEC gates; a 100 TB index skips everything beyond the
-        part-count check. Best-effort: a failure is logged as a warning
-        and the loads happen lazily on first use."""
-        if LOCAL_EXEC_MODE == "never":
-            return
-        total_parts = sum(g["num_partitions"] for g in self.gens)
-        if total_parts > LOCAL_EXEC_MAX_PARTS:
+        plane is small — the per-part norm arrays. Skipped on an index
+        above the driver-local part gate (_runs_local). Best-effort: a
+        failure is logged as a warning and the loads happen lazily on
+        first use."""
+        if not self._runs_local():
             return
         try:
             import pyarrow.dataset as pads
@@ -912,37 +934,6 @@ class SearchEngine:
         except Exception as e:
             _log.warning("driver-local warm-up (_prewarm_local_exec) "
                          "failed; its loads happen on first use: %s", e)
-
-    def _compute_scan_aligned(self) -> bool:
-        """True when the kind=0 store layout guarantees whole-part input
-        splits: stage 1 writes exactly one posting file per doc partition
-        (identity shuffle keys → one task per part), so as long as no
-        file exceeds half of spark.sql.files.maxPartitionBytes Spark will
-        never split one across tasks — every scan task sees COMPLETE
-        parts and the pre-scoring groupBy exchange is pure waste (the
-        data is already co-located on disk). Falls back to the shuffled
-        path automatically when a part's postings outgrow the bound (the
-        100 TB regime with huge parts)."""
-        try:
-            max_bytes = int(self.spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", str(128 << 20)))
-        except ValueError:
-            max_bytes = 128 << 20
-        biggest = 0
-        nfiles = 0
-        for g in self.gens:
-            store = f"{self.index_dir}/{g['prefix']}/store"
-            for root, _, files in os.walk(store):
-                if "kind=0" not in root:
-                    continue
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        nfiles += 1
-                        biggest = max(biggest, os.path.getsize(
-                            os.path.join(root, fn)))
-        self._posting_file_count = nfiles
-        self._max_partition_bytes = max_bytes
-        return 0 < biggest <= max_bytes // 2
 
     def _paths(self, name: str) -> list[str]:
         return [f"{self.index_dir}/{g['prefix']}/{name}" for g in self.gens]
@@ -1419,17 +1410,7 @@ class SearchEngine:
         if built is None:
             return None
         plan, fields, terms, needs_pos, _est = built
-        return self._partial_frame(
-            plan, self._query_postings(fields, terms, needs_pos))
-
-    def _query_postings(self, fields, terms, needs_pos: bool) -> DataFrame:
-        """The batch's posting chunks (field/term-pruned at the scan).
-        Positions are only decoded by phrase clauses — for term-only
-        batches the pos_bytes column (the largest payload) is pruned out
-        of the scan + shuffle entirely."""
-        postings = self._postings_base.filter(
-            F.col("field").isin(fields) & F.col("term").isin(terms))
-        return postings if needs_pos else postings.drop("pos_bytes")
+        return self._partial_frame(plan, fields, terms, needs_pos)
 
     def _build_scoring_plan(self, compiled: list[CompiledQuery],
                             limit: int | None, algo: str = "auto",
@@ -1487,10 +1468,9 @@ class SearchEngine:
             "caches": caches,
             "limit": limit,
             "algo": algo,
-            # norm/fast-field arrays are read DIRECTLY by the scoring UDF
-            # (part-pruned pyarrow over kind=1/kind=4, cached per worker) —
-            # no norms scan, no touched-parts semijoin, no cogroup: the
-            # whole search is scan → one exchange → score
+            # the store the scoring tasks read postings and norm/fast-field
+            # arrays from (part-pruned pyarrow, cached per process and
+            # epoch) — no Spark scan, no semijoin, no exchange
             "store_dirs": list(self._store_dirs),
             "store_epoch": self._store_epoch,
         }
@@ -1524,102 +1504,61 @@ class SearchEngine:
         total_parts = sum(g["num_partitions"] for g in self.gens)
         bound = total_parts * (k + offset) * len(compiled)
         # Driver-local execution for SMALL searches: the identical
-        # scoring kernel (_score_partition) over a pyarrow-pruned posting
-        # read — zero Spark jobs, skipping the ~0.5 s scan+Python-worker
-        # floor a 1 MB posting fetch pays as a cluster job (the tantivy
-        # single-searcher shape; same metadata-plane pattern as the
-        # pattern expansions and _doc_meta_pyarrow). Strictly gated:
-        # estimated decode volume (Σ df, phrase-weighted), batch width,
-        # and part count (footer metadata is per-file) — any big shape
-        # keeps the distributed path, which stays the 100 TB executor.
-        if (LOCAL_EXEC_MODE != "never" and bound <= MERGE_COLLECT_MAX
-                and len(compiled) <= LOCAL_EXEC_MAX_QUERIES
-                and total_parts <= LOCAL_EXEC_MAX_PARTS
-                and (est <= LOCAL_EXEC_MAX_ROWS
-                     or LOCAL_EXEC_MODE == "always")):
+        # reader and kernel (_score_parts) in the driver process — zero
+        # Spark jobs, skipping the ~0.5 s task + Python-worker floor a
+        # 1 MB posting fetch pays as a cluster job (the tantivy
+        # single-searcher shape). Any big shape keeps the distributed
+        # path, which stays the 100 TB executor.
+        if self._runs_local(est, bound, len(compiled)):
             pdf = self._score_local(plan, fields, terms, needs_pos)
             return self._merge_driver_pdf(pdf, k, offset)
-        partial = self._partial_frame(
-            plan, self._query_postings(fields, terms, needs_pos))
+        partial = self._partial_frame(plan, fields, terms, needs_pos)
         if bound <= MERGE_COLLECT_MAX:
-            # AQE is a net loss for this fixed scan→exchange→score shape:
-            # it runs the shuffle stage as its OWN job (a barrier between
-            # two scheduling rounds) and coalesces the tiny-byte posting
-            # shuffle down to a handful of tasks — serializing the
-            # CPU-heavy scoring stage that the bytes don't predict.
-            # Disabling it for the scoring collect makes a search exactly
-            # ONE fixed-parallelism Spark job (measured 2.2s → 0.7s warm
-            # hot-term at sf0.1 bench scale). Session-level toggle:
-            # restored in finally; a concurrent query planned in the
-            # window would only lose an optimization, never correctness.
-            conf = self.spark.conf
-            prev = conf.get("spark.sql.adaptive.enabled", "true")
-            prev_cost = conf.get("spark.sql.files.openCostInBytes", "4194304")
-            conf.set("spark.sql.adaptive.enabled", "false")
-            if self._scan_aligned:
-                # size open-cost so the per-part files pack into ≈cores
-                # tasks: the default 4 MB packs them into a handful
-                # (serializing the CPU-heavy scoring), while 1 file/task
-                # costs a Python-worker round trip per PART (measured
-                # ~0.7 s of pure invocation overhead at P=128). Each task
-                # still holds only COMPLETE parts.
-                cores = max(self.spark.sparkContext.defaultParallelism, 1)
-                per_task = max(1, -(-self._posting_file_count // cores))
-                conf.set("spark.sql.files.openCostInBytes",
-                         str(max(4 << 20, self._max_partition_bytes // per_task)))
-            try:
-                return self._merge_driver(partial, len(compiled), k, offset)
-            finally:
-                conf.set("spark.sql.adaptive.enabled", prev)
-                conf.set("spark.sql.files.openCostInBytes", prev_cost)
+            return self._merge_driver(partial, len(compiled), k, offset)
         return self._merge_window(partial, k, offset)
 
-    def _partial_frame(self, plan: dict, postings: DataFrame) -> DataFrame:
-        """Per-partition scoring frame (query_id, doc_ord, score).
+    def _runs_local(self, decode_rows: int = 0, result_rows: int = 0,
+                    queries: int = 1) -> bool:
+        """The driver-local gate of searches, match frames and the
+        open-time warm-up: the index has ≤ LOCAL_EXEC_MAX_PARTS parts,
+        and the call decodes ≤ LOCAL_EXEC_MAX_ROWS posting rows,
+        collects ≤ MERGE_COLLECT_MAX result rows and carries ≤
+        LOCAL_EXEC_MAX_QUERIES queries."""
+        return (sum(g["num_partitions"] for g in self.gens)
+                <= LOCAL_EXEC_MAX_PARTS
+                and decode_rows <= LOCAL_EXEC_MAX_ROWS
+                and result_rows <= MERGE_COLLECT_MAX
+                and queries <= LOCAL_EXEC_MAX_QUERIES)
 
-        Scan-aligned (the common case): one posting file per doc
-        partition means every scan task already holds complete parts —
-        group per part INSIDE the task and score, ZERO shuffle. On a
-        1000-executor cluster this removes the per-query all-to-all;
-        locally it removes the shuffle stage barrier. Falls back to the
-        groupBy exchange when a part's postings could split across scan
-        tasks (oversized files — see _compute_scan_aligned)."""
-        if self._scan_aligned:
-            def run_map(batches):
-                chunks = [pdf for pdf in batches if len(pdf)]
-                if not chunks:
-                    return
-                pdf = (pd.concat(chunks, ignore_index=True)
-                       if len(chunks) > 1 else chunks[0])
-                for _, g in pdf.groupby("part_id", sort=True):
-                    yield _score_partition(plan, g)
+    def _partial_frame(self, plan: dict, fields, terms,
+                       needs_pos: bool) -> DataFrame:
+        """Distributed per-partition scoring frame (query_id, doc_ord,
+        score): n = min(parts, defaultParallelism) tasks over
+        ``spark.range``, task i scoring every n-th part with
+        _score_parts. Each task reads its parts' postings and norms with
+        pyarrow, as the driver-local path does, so the plan is Range →
+        MapInPandas: no scan, no exchange, nothing for AQE to re-plan."""
+        parts = [p for g in self.gens
+                 for p in range(g["part_offset"],
+                                g["part_offset"] + g["num_partitions"])]
+        n = max(1, min(len(parts),
+                       self.spark.sparkContext.defaultParallelism))
 
-            return postings.mapInPandas(run_map, RESULT_SCHEMA)
+        def run(batches):
+            for pdf in batches:
+                for i in pdf["id"].tolist():
+                    yield _score_parts(plan, parts[i::n], fields, terms,
+                                       needs_pos)
 
-        def run(pdf):
-            return _score_partition(plan, pdf)
-
-        return postings.groupBy("part_id").applyInPandas(run, RESULT_SCHEMA)
+        return self.spark.range(0, n, 1, n).mapInPandas(run, RESULT_SCHEMA)
 
     def _score_local(self, plan: dict, fields, terms,
                      needs_pos: bool) -> pd.DataFrame:
-        """Driver-local scoring: the SAME per-part kernel
-        (_score_partition) over a pyarrow read of the query terms'
-        posting chunks (kind-partition + field/term row-group pruned),
-        sharing the process-level norm/tombstone caches the executors
-        use. Bitwise-identical to the distributed path by construction —
-        pinned by tests/test_search_parity.py::test_local_exec_ab_parity."""
-        cols = ["part_id", "field", "term", "df_part", "cf_part",
-                "n_local", "doc_bytes", "tf_bytes", "meta_bytes"]
-        if needs_pos:
-            cols.append("pos_bytes")
-        pdf = _local_postings(plan["store_dirs"], plan.get("store_epoch", ""),
-                              fields, terms, cols)
-        outs = [_score_partition(plan, g)
-                for _, g in pdf.groupby("part_id", sort=True)]
-        if not outs:
-            return _score_partition(plan, pdf.iloc[0:0])
-        return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+        """Driver-local scoring: _score_parts over every part, sharing
+        the process-level dataset/norm/tombstone caches. Bitwise-identical
+        to the distributed path by construction — pinned by
+        tests/test_search_parity.py::test_local_exec_ab_parity."""
+        return _score_parts(plan, None, fields, terms, needs_pos)
 
     # hit sets up to this size materialize doc_meta via a driver-side
     # pyarrow pruned read (metadata-plane, no Spark job); larger sets go
@@ -1664,7 +1603,7 @@ class SearchEngine:
             return self._empty_result()
         # gate on DISTINCT docs, not hit rows: a 64-query batch's hits
         # overlap heavily (640 rows ≈ 150 docs), and the pyarrow read cost
-        # scales with docs while the VALUES result handles any row count
+        # scales with docs while the Arrow result handles any row count
         uniq = {h[2] for h in hits}
         if len(uniq) <= self._META_PYARROW_MAX:
             meta = self._doc_meta_pyarrow(uniq)
@@ -1796,9 +1735,9 @@ class SearchEngine:
         clauses — bitwise the score ``search`` would return for this doc.
         ``matches`` applies the full boolean gate (Must-wrapped Should
         group, musts, range musts, must_nots, score>0). Driver-side by
-        construction: one doc-address lookup + one tiny posting collect
-        (the involved (field, term) rows of ONE part) + a part-pruned
-        pyarrow norms read — never a corpus scan."""
+        construction: one doc-address lookup + a part-pruned pyarrow read
+        of the involved (field, term) posting rows of ONE part and of
+        its norms — never a corpus scan."""
         from ..index.fieldnorm import id_to_fieldnorm
 
         cq = self._compile_arg(query, filters, boosts)
@@ -1820,15 +1759,14 @@ class SearchEngine:
         specs = _clause_specs(cq, dfs, m.num_docs)
         fields = sorted({f for f, _ in keys})
         terms = sorted({t for _, t in keys})
-        rows = (self._postings_base
-                .filter((F.col("part_id") == part)
-                        & F.col("field").isin(fields)
-                        & F.col("term").isin(terms))
-                .collect())
-        payload = {(r["field"], r["term"]): r for r in rows}
+        rows = _local_postings(
+            self._store_dirs, self._store_epoch, fields, terms,
+            ["field", "term", "doc_bytes", "tf_bytes", "pos_bytes"],
+            part_ids=[part])
+        payload = {(r["field"], r["term"]): r
+                   for r in rows.to_dict("records")}
         norm_arrays, fast_arrays = _load_part_arrays(
-            tuple(f"{self.index_dir}/{g['prefix']}/store" for g in self.gens),
-            part, f"{m.created_utc}#{getattr(m, 'commit_seq', 0)}")
+            self._store_dirs, part, self._store_epoch)
         caches = {f: norm_cache(m.field_totals.get(f, 0) / m.num_docs
                                 if m.num_docs else 1.0) for f in fields}
 
@@ -2254,7 +2192,17 @@ class SearchEngine:
                   for grp in cq.extra_groups]
                  + [{(c.field, t) for t in c.terms} for c in cq.musts])
         nots = [{(c.field, t) for t in c.terms} for c in cq.must_nots]
-        if self._match_local_ok(should, musts + nots):
+        # driver-local when the gate holds (decode volume Σ df over every
+        # clause pair; result bound min(num_docs, Σ df of the Should
+        # union), the frame crossing to the JVM as one Arrow
+        # LocalRelation) and no tombstone set is too large to ship
+        # (tombstone_dirs stay executor-side reads)
+        union = set().union(*should)
+        dfs = self._term_dfs(union.union(*musts, *nots))
+        if (self._runs_local(sum(dfs.values()),
+                             min(self.manifest.num_docs,
+                                 sum(dfs[p] for p in union)))
+                and not self._tombstone_plan()["tombstone_dirs"]):
             return self._doc_meta_local(
                 self._match_ords_local(msm, should, musts, nots),
                 getattr(cq, "range_musts", ()))
@@ -2284,29 +2232,6 @@ class SearchEngine:
             if le is not None:
                 dm = dm.filter(F.col(field) <= le)
         return self._anti_tombstone(dm)
-
-    def _match_local_ok(self, should: list, others: list) -> bool:
-        """Gate of the driver-local match frame, the _execute_compiled
-        gates on the match-set path: LOCAL_EXEC_MODE (never | always |
-        auto), total parts ≤ LOCAL_EXEC_MAX_PARTS, Σ global df over the
-        clause pairs ≤ LOCAL_EXEC_MAX_ROWS (the driver decode volume),
-        the match-set bound min(num_docs, Σ df of the Should union) ≤
-        MERGE_COLLECT_MAX (the frame crosses to the JVM as one Arrow
-        LocalRelation), and no tombstone set too large to ship
-        (tombstone_dirs — those stay executor-side reads)."""
-        if LOCAL_EXEC_MODE == "never":
-            return False
-        if sum(g["num_partitions"] for g in self.gens) > LOCAL_EXEC_MAX_PARTS:
-            return False
-        if LOCAL_EXEC_MODE != "always":
-            union = set().union(*should)
-            dfs = self._term_dfs(union.union(*others))
-            if sum(dfs.values()) > LOCAL_EXEC_MAX_ROWS:
-                return False
-            if min(self.manifest.num_docs,
-                   sum(dfs[p] for p in union)) > MERGE_COLLECT_MAX:
-                return False
-        return not self._tombstone_plan()["tombstone_dirs"]
 
     def _match_ords_local(self, msm: int, should: list, musts: list,
                           nots: list) -> np.ndarray:
@@ -2771,63 +2696,21 @@ class SearchEngine:
             }
         return self._tomb_cache
 
-    _HIT_SELECT = ("CAST(col1 AS LONG) AS query_id, CAST(col2 AS INT) AS rank, "
-                   "col3 AS doc_id, col4 AS url, col5 AS domain, "
-                   "col6 AS title, CAST(col7 AS STRING) AS description, "
-                   "col8 AS tags, col9 AS score, CAST(col10 AS LONG) AS doc_ord")
-
     def _local_hits_df(self, rows: list[tuple]) -> DataFrame:
-        """Driver-resident hit rows → DataFrame WITHOUT a Spark job.
+        """Driver-resident hit rows → DataFrame WITHOUT a Spark job: a
+        pyarrow table becomes a Catalyst LocalRelation directly (as in
+        _doc_meta_local), whatever the Arrow conf, so the caller's
+        ``collect()`` launches no job — ``createDataFrame`` from python
+        ROWS would parallelize into an RDD and run one just to read back
+        ≤k rows. NUL-safe; pinned by
+        tests/test_search_parity.py::test_local_hits_values_roundtrip."""
+        import pyarrow as pa
 
-        ``spark.createDataFrame`` from python ROWS parallelizes into an
-        RDD, so the caller's ``collect()`` launches a
-        (defaultParallelism-task) job just to read back ≤k local rows —
-        ~0.3-0.9 s of pure scheduling on a warm local[32]. Two job-free
-        LocalRelation paths instead:
-
-        - Arrow (preferred): ``createDataFrame(pandas)`` with
-          spark.sql.execution.arrow.pyspark.enabled converts the batch
-          into a Catalyst LocalRelation directly (Spark 4 keeps local
-          Arrow data under arrow.localRelationThreshold driver-side) —
-          ~6x faster than parsing a VALUES literal at 640 rows (0.36 s →
-          0.06 s) and NUL-safe, still ZERO jobs at collect (pinned by
-          tests/test_search_parity.py::test_local_hits_values_roundtrip).
-        - VALUES literal fallback when Arrow is off: strings are
-          SQL-escaped; rows with characters the parser can't round-trip
-          (NUL) fall back to a single-slice parallelize."""
-        try:
-            arrow_on = self.spark.conf.get(
-                "spark.sql.execution.arrow.pyspark.enabled", "false") == "true"
-        except Exception:
-            arrow_on = False
-        if arrow_on:
-            pdf = pd.DataFrame(rows, columns=HIT_COLUMNS)
-            return self.spark.createDataFrame(
-                pdf, schema="query_id long, rank int, doc_id string, "
-                "url string, domain string, title string, "
-                "description string, tags array<long>, score float, "
-                "doc_ord long")
-        if any(isinstance(v, str) and "\x00" in v for r in rows for v in r):
-            return self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize(rows, 1),
-                "query_id long, rank int, doc_id string, url string, "
-                "domain string, title string, description string, "
-                "tags array<long>, score float, doc_ord long")
-
-        def s(v):  # string literal ('' and \ escaped; backslash-escape mode)
-            if v is None:
-                return "CAST(NULL AS STRING)"
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-        vals = []
-        for qid, rank, did, url, dom, ti, desc, tags, score, ord_ in rows:
-            tl = ("CAST(array() AS ARRAY<LONG>)" if not tags else
-                  "array(" + ",".join(f"{int(t)}L" for t in tags) + ")")
-            vals.append(
-                f"({int(qid)},{int(rank)},{s(did)},{s(url)},{s(dom)},{s(ti)},"
-                f"{s(desc)},{tl},CAST({float(score)!r} AS FLOAT),{int(ord_)}L)")
-        return self.spark.sql(
-            f"SELECT {self._HIT_SELECT} FROM (VALUES {','.join(vals)})")
+        types = [pa.int64(), pa.int32(), *[pa.string()] * 5,
+                 pa.list_(pa.int64()), pa.float32(), pa.int64()]
+        return self.spark.createDataFrame(pa.Table.from_pylist(
+            [dict(zip(HIT_COLUMNS, r)) for r in rows],
+            schema=pa.schema(list(zip(HIT_COLUMNS, types)))))
 
     def _empty_result(self) -> DataFrame:
         # literal empty relation (LocalRelation — collect() runs no job)

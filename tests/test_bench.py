@@ -62,6 +62,21 @@ def test_4_cores_name_keys_after_1_and_4():
     assert not any("_8c" in k or "_32c" in k for k in s)
 
 
+def test_unmeasurable_marginal_rate_is_none():
+    # same docs in both builds, or a full build no slower than the small
+    assert bench.marginal_rate(0, 5.0) is None
+    assert bench.marginal_rate(1000, 0.0) is None
+    assert bench.marginal_rate(1000, -1.5) is None
+    assert bench.marginal_rate(1000, 4.0) == 250.0
+    lo, hi = bench.leg_levels(4)
+    legs = [_leg(lo, 30.0), dict(_leg(hi, 10.0), marginal_docs_per_sec=None)]
+    s = bench.summarize_legs(legs, {lo: 1e6, hi: 3e6}, lo, hi)
+    assert s["marginal_docs_per_sec_1c"] == 66.7
+    assert s["marginal_docs_per_sec_4c"] is None
+    assert s["scaling_efficiency_marginal_1_to_4"] is None
+    assert s["scaling_efficiency_1_to_4"] == 0.75
+
+
 def test_spread_is_min_median_max():
     assert bench.spread([3.0, 1.0, 2.0]) == [1.0, 2.0, 3.0]
     assert bench.spread([5.0]) == [5.0, 5.0, 5.0]

@@ -264,10 +264,9 @@ def test_edge_cases_parity(spark, tmp_path):
 
 
 def test_local_hits_values_roundtrip(engine):
-    """The VALUES-LocalRelation result path must round-trip every string
-    the parser can represent (quotes, backslashes, control chars,
-    unicode) bitwise, fall back to parallelize for NUL, and launch ZERO
-    Spark jobs on collect for the literal path."""
+    """The Arrow LocalRelation result path must round-trip every string
+    bitwise (quotes, backslashes, control chars, unicode, NUL) and
+    launch ZERO Spark jobs on collect."""
     nasty = [
         (0, 1, "d'x", 'u"\\z', "dom\nnl", "ti\tq", None, [1, 2],
          1.5, 42),
@@ -296,70 +295,86 @@ def test_local_hits_values_roundtrip(engine):
         "description", "tags", "score", "doc_ord"]
 
 
-def test_scan_aligned_ab_parity(spark, built_index):
-    """Zero-shuffle scoring (scan-aligned mapInPandas over whole-part
-    input splits) vs the shuffled groupBy→applyInPandas fallback must be
-    bitwise identical — the layout optimization is a physical-plan
-    choice only, never a semantics change. Runs the SAME engine with
-    _scan_aligned toggled, covering single, phrase, filtered and batch
-    shapes."""
-    from spyglass_spark.query.executor import SearchEngine
+def _tombstoned_copy(spark, built_index, tmp_path):
+    """A copy of the fixture index carrying a second generation (an
+    upsert of 10 docs) and both tombstone sources (upsert /
+    delete_by_urls side tables, delete_by_ids manifest doc_ids)."""
+    import shutil
 
-    eng = SearchEngine(spark, built_index["index_dir"])
-    assert eng._scan_aligned, \
-        "test index should qualify for the zero-shuffle path (tiny files)"
-    queries = [{"query": "salinas"}, {"query": "fn"},
-               {"query": "import sys"}, {"query": "parse token stream"},
-               {"query": "the parsing of tokens"}]
-    a = eng.search_many(queries, k=8).collect()
-    eng._scan_aligned = False
-    b = eng.search_many(queries, k=8).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    a, b = sorted(a, key=key), sorted(b, key=key)
-    assert len(a) == len(b) and len(a) > 0
-    for ra, rb in zip(a, b):
-        assert (ra["query_id"], ra["rank"], ra["doc_id"], ra["score"]) == \
-               (rb["query_id"], rb["rank"], rb["doc_id"], rb["score"])
+    from spyglass_spark.index.builder import (delete_by_ids, delete_by_urls,
+                                              upsert_documents)
+
+    docs = built_index["docs"]
+    idx = str(tmp_path / "tombstoned")
+    shutil.copytree(built_index["index_dir"], idx)
+    upsert_documents(spark, spark.createDataFrame(docs[:10]), idx,
+                     num_partitions=2)
+    delete_by_urls(spark, idx, [docs[1]["url"], docs[20]["url"]])
+    delete_by_ids(idx, [docs[2]["doc_id"], docs[30]["doc_id"]])
+    return idx
 
 
-def test_local_exec_ab_parity(spark, built_index, monkeypatch):
-    """Driver-local execution (same kernel over a pyarrow posting read,
-    zero Spark jobs) vs the distributed path must be bitwise identical —
-    the gate is a scale/latency choice only, never a semantics change.
-    Covers single, multi-term, phrase-bearing and batch-of-2 shapes plus
-    a search_after page."""
+def test_local_exec_ab_parity(spark, built_index, tmp_path, monkeypatch):
+    """Driver-local execution (zero Spark jobs) vs the distributed path
+    must be bitwise identical — the gate is a scale/latency choice
+    only, never a semantics change. Covers single, multi-term,
+    phrase-bearing and batch-of-2 shapes plus a search_after page, on
+    the fixture index and on a two-generation copy with both tombstone
+    sources (part ids spanning two part offsets). The distributed side
+    is ONE Spark job whose scoring plan has no exchange and no parquet
+    scan (the tasks read postings with pyarrow)."""
     from spyglass_spark.query import executor as X
 
-    eng = X.SearchEngine(spark, built_index["index_dir"])
+    frames = []
+    partial_frame = X.SearchEngine._partial_frame
+
+    def spy(self, *args):
+        frames.append(partial_frame(self, *args))
+        return frames[-1]
+
+    monkeypatch.setattr(X.SearchEngine, "_partial_frame", spy)
+    max_parts = X.LOCAL_EXEC_MAX_PARTS
     queries = [{"query": "salinas"}, {"query": "parse token stream"}]
     single = [{"query": "the parsing of tokens"}]
+    for index_dir in (built_index["index_dir"],
+                      _tombstoned_copy(spark, built_index, tmp_path)):
+        eng = X.SearchEngine(spark, index_dir)
+        monkeypatch.setattr(X, "LOCAL_EXEC_MAX_PARTS", max_parts)
+        a_batch = eng.search_many(queries, k=8).collect()
+        a_single = eng.search_many(single, k=8).collect()
+        a_jobs = eng.last_meta["spark_jobs"]
+        cursor = (a_single[2]["score"], a_single[2]["doc_ord"]) \
+            if len(a_single) > 2 else None
+        a_page = (eng.search_many(single, k=3).collect()
+                  if cursor is None else
+                  eng.search_many([dict(single[0], after=cursor)],
+                                  k=3).collect())
+        assert frames == []
 
-    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "always")
-    a_batch = eng.search_many(queries, k=8).collect()
-    a_single = eng.search_many(single, k=8).collect()
-    a_jobs = eng.last_meta["spark_jobs"]
-    cursor = (a_single[2]["score"], a_single[2]["doc_ord"]) \
-        if len(a_single) > 2 else None
-    a_page = (eng.search_many(single, k=3).collect()
-              if cursor is None else
-              eng.search_many([dict(single[0], after=cursor)], k=3).collect())
+        monkeypatch.setattr(X, "LOCAL_EXEC_MAX_PARTS", 0)
+        b_batch = eng.search_many(queries, k=8).collect()
+        b_single = eng.search_many(single, k=8).collect()
+        b_jobs = eng.last_meta["spark_jobs"]
+        b_page = (eng.search_many(single, k=3).collect()
+                  if cursor is None else
+                  eng.search_many([dict(single[0], after=cursor)],
+                                  k=3).collect())
 
-    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "never")
-    b_batch = eng.search_many(queries, k=8).collect()
-    b_single = eng.search_many(single, k=8).collect()
-    b_page = (eng.search_many(single, k=3).collect()
-              if cursor is None else
-              eng.search_many([dict(single[0], after=cursor)], k=3).collect())
-
-    assert a_jobs == 0  # driver-local = zero Spark jobs
-    for a, b in ((a_batch, b_batch), (a_single, b_single),
-                 (a_page, b_page)):
-        assert len(a) == len(b) and len(a) > 0
-        for ra, rb in zip(a, b):
-            assert (ra["query_id"], ra["rank"], ra["doc_id"],
-                    ra["score"], ra["doc_ord"]) == \
-                   (rb["query_id"], rb["rank"], rb["doc_id"],
-                    rb["score"], rb["doc_ord"])
+        assert a_jobs == 0  # driver-local = zero Spark jobs
+        assert b_jobs == 1  # distributed = one scoring job
+        assert len(frames) == 3
+        for df in frames:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan and "Scan parquet" not in plan, plan
+        frames.clear()
+        for a, b in ((a_batch, b_batch), (a_single, b_single),
+                     (a_page, b_page)):
+            assert len(a) == len(b) and len(a) > 0
+            for ra, rb in zip(a, b):
+                assert (ra["query_id"], ra["rank"], ra["doc_id"],
+                        ra["score"], ra["doc_ord"]) == \
+                       (rb["query_id"], rb["rank"], rb["doc_id"],
+                        rb["score"], rb["doc_ord"])
 
 
 def _agg_ab_queries(docs):
@@ -376,12 +391,13 @@ def _agg_ab_queries(docs):
             "zzzznohit"]
 
 
-def _agg_ab_rows(X, eng, monkeypatch, mode, queries, agg_queries):
-    """Under LOCAL_EXEC_MODE ``mode``: the match frame of every query in
+def _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries):
+    """Under LOCAL_EXEC_MAX_PARTS = ``max_parts`` (0 pins the
+    distributed path): the match frame of every query in
     ``queries`` (all its columns, in doc_ord order), and count_matches,
     facet_counts, terms_agg(domain) and date_histogram of every query
     in ``agg_queries`` (rows order-normalized)."""
-    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", mode)
+    monkeypatch.setattr(X, "LOCAL_EXEC_MAX_PARTS", max_parts)
     frames = [sorted(eng._match_frame(q, (), (), "ab").collect(),
                      key=lambda r: r["doc_ord"]) for q in queries]
     aggs = [(eng.count_matches(q).collect(),
@@ -408,77 +424,51 @@ def test_agg_local_exec_ab_parity(spark, built_index, tmp_path,
     local frame launches no Spark job on a fresh index; a match-set
     bound or decode volume over its cap and an unshippable tombstone
     set take the distributed path."""
-    import shutil
-
-    from spyglass_spark.index.builder import (delete_by_ids, delete_by_urls,
-                                              upsert_documents)
     from spyglass_spark.query import executor as X
 
-    docs = built_index["docs"]
-    queries = _agg_ab_queries(docs)
+    queries = _agg_ab_queries(built_index["docs"])
+    max_parts = X.LOCAL_EXEC_MAX_PARTS
     eng = X.SearchEngine(spark, built_index["index_dir"])
     sc = spark.sparkContext
     sc.setJobGroup("agg-local-frame", "driver-local match frame")
     try:
-        frame = eng._match_frame("fn", (), (), "ab")  # mode auto
+        frame = eng._match_frame("fn", (), (), "ab")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sc.statusTracker().getJobIdsForGroup("agg-local-frame") == []
     assert _frame_is_local(frame)
 
     agg_queries = ["fn", {"parsed": "fn -main"}]
-    local = _agg_ab_rows(X, eng, monkeypatch, "always", queries, agg_queries)
-    dist = _agg_ab_rows(X, eng, monkeypatch, "never", queries, agg_queries)
+    local = _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries)
+    dist = _agg_ab_rows(X, eng, monkeypatch, 0, queries, agg_queries)
     assert local == dist
     frames, aggs = local
     assert all(frames[:-1]) and frames[-1] == []  # last: empty match set
     assert all(a[0][0]["n"] > 0 and a[1] and a[2] and a[3] for a in aggs)
 
-    # over a cap → distributed (auto mode)
-    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "auto")
+    # over a cap → distributed
+    monkeypatch.undo()
     monkeypatch.setattr(X, "MERGE_COLLECT_MAX", 0)
     assert not _frame_is_local(eng._match_frame("fn", (), (), "ab"))
     monkeypatch.undo()
     monkeypatch.setattr(X, "LOCAL_EXEC_MAX_ROWS", 0)
     assert not _frame_is_local(eng._match_frame("fn", (), (), "ab"))
+    monkeypatch.undo()
 
     # a second generation plus both tombstone sources
-    idx = str(tmp_path / "agg_ab")
-    shutil.copytree(built_index["index_dir"], idx)
-    upsert_documents(spark, spark.createDataFrame(docs[:10]), idx,
-                     num_partitions=2)
-    delete_by_urls(spark, idx, [docs[1]["url"], docs[20]["url"]])
-    delete_by_ids(idx, [docs[2]["doc_id"], docs[30]["doc_id"]])
-    teng = X.SearchEngine(spark, idx)
+    teng = X.SearchEngine(spark,
+                          _tombstoned_copy(spark, built_index, tmp_path))
     plan = teng._tombstone_plan()
     assert plan["tombstone_ords"].size >= 14 and not plan["tombstone_dirs"]
-    local = _agg_ab_rows(X, teng, monkeypatch, "always", queries, ["fn"])
-    dist = _agg_ab_rows(X, teng, monkeypatch, "never", queries, ["fn"])
+    local = _agg_ab_rows(X, teng, monkeypatch, max_parts, queries, ["fn"])
+    dist = _agg_ab_rows(X, teng, monkeypatch, 0, queries, ["fn"])
     assert local == dist
-    # tombstones too many to ship → distributed even when forced local
+    # tombstones too many to ship → distributed even under the gates
     monkeypatch.setattr(X, "TOMBSTONE_SHIP_MAX", 0)
-    monkeypatch.setattr(X, "LOCAL_EXEC_MODE", "always")
+    monkeypatch.setattr(X, "LOCAL_EXEC_MAX_PARTS", max_parts)
     teng.refresh()
     assert teng._tombstone_plan()["tombstone_dirs"]
     assert not _frame_is_local(teng._match_frame("fn", (), (), "ab"))
-
-
-def test_scan_aligned_fallback_trigger(spark, built_index):
-    """A posting file bigger than maxPartitionBytes/2 could be split
-    across scan tasks (partial parts → wrong per-part scoring), so
-    _compute_scan_aligned must disable the zero-shuffle path under a
-    small split bound."""
-    from spyglass_spark.query.executor import SearchEngine
-
-    eng = SearchEngine(spark, built_index["index_dir"])
-    assert eng._posting_file_count > 0
-    prev = spark.conf.get("spark.sql.files.maxPartitionBytes",
-                          str(128 << 20))
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
-        assert eng._compute_scan_aligned() is False
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
 
 
 def test_search_union_vs_oracle(spark, built_index, tmp_path):

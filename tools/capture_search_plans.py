@@ -9,8 +9,8 @@ present in both versions — to capture the distributed scoring plan, runs
 each bench search shape verbatim, and records last_meta (spark_jobs /
 merge path / wand counters). On the HEAD version each shape is run twice:
 once as the bench runs it (driver-local path may engage) and once with
-SPYGLASS_LOCAL_EXEC=never to show the distributed plan the same shape
-takes above the gates.
+executor.LOCAL_EXEC_MAX_PARTS = 0 to show the distributed plan the same
+shape takes above the gates.
 
 Usage: python tools/capture_search_plans.py before|after
 """
@@ -61,8 +61,8 @@ def main(label: str) -> None:
     captured: list[str] = []
     orig_partial = SearchEngine._partial_frame
 
-    def hook(self, plan, postings):
-        df = orig_partial(self, plan, postings)
+    def hook(self, *args):
+        df = orig_partial(self, *args)
         captured.append(_explain(df))
         return df
 
@@ -94,20 +94,20 @@ def main(label: str) -> None:
             # HEAD only: show the distributed plan for the same shape
             if not captured and hasattr(eng, "_score_local"):
                 import spyglass_spark.query.executor as X
-                prev = X.LOCAL_EXEC_MODE
-                X.LOCAL_EXEC_MODE = "never"
+                prev = X.LOCAL_EXEC_MAX_PARTS
+                X.LOCAL_EXEC_MAX_PARTS = 0
                 try:
                     captured.clear()
                     fn(eng)
                     meta2 = dict(eng.last_meta)
                     lines.append("")
-                    lines.append("## same shape with SPYGLASS_LOCAL_EXEC="
-                                 "never (the >gates / 100 TB path)")
+                    lines.append("## same shape with LOCAL_EXEC_MAX_PARTS"
+                                 " = 0 (the >gates / 100 TB path)")
                     lines.append(f"spark_jobs: {meta2.get('spark_jobs')}")
                     if captured:
                         lines.append(captured[-1].rstrip())
                 finally:
-                    X.LOCAL_EXEC_MODE = prev
+                    X.LOCAL_EXEC_MAX_PARTS = prev
             path = os.path.join(PLANS_DIR, f"{name}_{label}.txt")
             with open(path, "w") as f:
                 f.write("\n".join(lines) + "\n")

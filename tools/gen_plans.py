@@ -58,14 +58,14 @@ section("Query-term postings scan (kind-partitioned store)", postings,
 scoring = eng._partial_frame(
     {"queries": [], "caches": {}, "limit": 10, "algo": "auto",
      "store_dirs": [], "store_epoch": ""},
-    postings.drop("pos_bytes"))
-section("Search scoring stage (zero-shuffle, scan-aligned)", scoring,
-        "- ONE stage, NO exchange: stage 1 wrote one posting file per doc\n"
-        "  partition, so every scan task already holds complete parts and\n"
-        "  the scoring MapInPandas groups per part inside the task. On a\n"
-        "  multi-executor cluster a query never does an all-to-all.\n"
-        "- Falls back to groupBy+applyInPandas automatically when a part's\n"
-        "  posting file could split across scan tasks (oversized parts).", 30)
+    ["content"], ["spark"], False)
+section("Search scoring stage (range-driven, no scan)", scoring,
+        "- ONE stage, NO exchange, NO scan: Range emits one row per task\n"
+        "  (min(parts, defaultParallelism) tasks), and each MapInPandas\n"
+        "  task scores every n-th part with the driver-local reader and\n"
+        "  kernel — a part/field/term-pruned pyarrow read of the posting\n"
+        "  store plus the part's norms. No posting byte crosses the\n"
+        "  JVM→Python boundary, and AQE has nothing to re-plan.", 30)
 
 section("SQL-form BM25 top-k (pure DataFrame plan)", E.q_bm25_topk_simple(spark, SF),
         "- Whole-stage codegen end to end — zero Python in the plan.\n"
