@@ -17,7 +17,10 @@ number:
     reports build_sec_spread_{c}c = [min, median, max] over its rounds;
   - a pure tokenize+encode kernel at lo and hi concurrent processes is
     the control: if the kernel itself doesn't scale, the host was
-    saturated and the end-to-end ratio is not interpretable;
+    saturated and the end-to-end ratio is not interpretable. It runs
+    KERNEL_SAMPLES times per level and round; kernel_tokens_per_sec_{c}p
+    keeps the best sample, kernel_tokens_per_sec_spread_{c}p reports
+    [min, median, max];
   - each leg also times a small warmup build of the IDENTICAL derivation
     (1/REPLICAS of the docs): the marginal throughput
     (docs_big − docs_small) / (T_big − T_small) cancels fixed per-build
@@ -65,6 +68,7 @@ WORK_DIR = os.environ.get("SPYGLASS_BENCH_DIR",
                           "/dev/shm/spyglass_bench"
                           if os.path.isdir("/dev/shm") else "/tmp/spyglass_bench")
 HEADLINE_PASSES = 3
+KERNEL_SAMPLES = 3
 
 
 def _leg_session(cores: int):
@@ -183,13 +187,15 @@ def _round(v, digits: int):
 
 
 def summarize_legs(legs: list[dict], kernel: dict[int, float],
-                   lo: int, hi: int) -> dict:
+                   lo: int, hi: int,
+                   kernel_samples: dict[int, list] | None = None) -> dict:
     """Build-leg summary keyed by core count: each level keeps its
     fastest leg (by build_sec) plus the [min, median, max] build_sec
     over all its legs; ratios are divided by hi/lo so 1.0 is linear
     scaling, and a marginal rate that is not measurable (None, see
     marginal_rate) makes its ratio None too. ``kernel`` is the best
-    control throughput per level."""
+    control throughput per level; ``kernel_samples``, when given, adds
+    each level's [min, median, max] over all its control samples."""
     b_lo, b_hi = _best_leg(legs, lo), _best_leg(legs, hi)
     m_lo, m_hi = b_lo["marginal_docs_per_sec"], b_hi["marginal_docs_per_sec"]
     ideal = hi / lo
@@ -220,6 +226,9 @@ def summarize_legs(legs: list[dict], kernel: dict[int, float],
     for c in (lo, hi):
         out[f"build_sec_spread_{c}c"] = [round(v, 2) for v in spread(
             [g["build_sec"] for g in legs if g["cores"] == c])]
+        if kernel_samples:
+            out[f"kernel_tokens_per_sec_spread_{c}p"] = [
+                round(v, 1) for v in spread(kernel_samples[c])]
     return out
 
 
@@ -301,12 +310,14 @@ def main() -> None:
     # --- scaling legs: interleaved rounds at lo and hi cores -------------
     lo, hi = leg_levels(CPUS)
     legs: list[dict] = []
-    kernel = {lo: 0.0, hi: 0.0}
+    kernel: dict[int, list] = {lo: [], hi: []}
     for _ in range(LEG_ROUNDS):
         for cores in sorted({lo, hi}):
             legs.append(_run_leg(cores))
-            kernel[cores] = max(kernel[cores], _kernel_throughput(cores))
-    build = summarize_legs(legs, kernel, lo, hi)
+            kernel[cores] += [_kernel_throughput(cores)
+                              for _ in range(KERNEL_SAMPLES)]
+    build = summarize_legs(legs, {c: max(v) for c, v in kernel.items()},
+                           lo, hi, kernel)
     index_dir = _best_leg(legs, hi)["index_dir"]
 
     # --- headline queries on the hi-core index ---------------------------

@@ -26,10 +26,10 @@ re-expressed Spark-first):
    runs DRIVER-SIDE over ≤ parts×(k+offset)×queries tiny rows collected
    from the single scoring job (the TopDocs heap analog). Above a size
    guard the merge falls back to a distributed window — same ordering.
-5. Small hit sets materialize doc_meta display fields incl. tags
+5. Driver-merged hits materialize doc_meta display fields incl. tags
    (RetrievedDocument{..tags}, lib.rs:130-139) via a driver-side pyarrow
-   pruned read; larger sets broadcast-join. score > 0 post-filter per
-   client/local.rs:138; tie-break (score desc, ord asc).
+   pruned read at any size; the distributed window joins them. score > 0
+   post-filter per client/local.rs:138; tie-break (score desc, ord asc).
 """
 
 from __future__ import annotations
@@ -929,8 +929,9 @@ class SearchEngine:
             # first Arrow local-relation conversion in a session pays ~1 s
             # of JVM classloading; do it once at open with a dummy row so
             # the first query's result materialization doesn't
-            self._local_hits_df(
-                [(0, 1, "w", "w", "w", "w", None, [], 0.0, 0)]).collect()
+            self._local_hits_df(dict(zip(HIT_COLUMNS, (
+                [0], [1], ["w"], ["w"], ["w"], ["w"], [None], [[]], [0.0],
+                [0])))).collect()
         except Exception as e:
             _log.warning("driver-local warm-up (_prewarm_local_exec) "
                          "failed; its loads happen on first use: %s", e)
@@ -1155,6 +1156,7 @@ class SearchEngine:
             # how many of the batch's queries took the WAND pruning path
             # (algo='auto'); the rest fell back to the exhaustive scorer
             "wand_eligible": getattr(self, "_last_wand_eligible", 0),
+            "path": self._last_path,
             "wall_time_ms": round((time.time() - t0) * 1000.0, 1),
         }
         return out
@@ -1496,6 +1498,10 @@ class SearchEngine:
     def _execute_compiled(self, compiled: list[CompiledQuery], k: int = 5,
                           offset: int = 0, algo: str = "auto",
                           afters=None) -> DataFrame:
+        # which branch ran, for last_meta["path"]: "local" (driver-local
+        # scoring, or nothing to score), "driver_merge" (one scoring job,
+        # merged on the driver) or "window" (distributed merge)
+        self._last_path = "local"
         built = self._build_scoring_plan(compiled, k + offset, algo, afters)
         if built is None:
             return self._empty_result()
@@ -1514,7 +1520,9 @@ class SearchEngine:
             return self._merge_driver_pdf(pdf, k, offset)
         partial = self._partial_frame(plan, fields, terms, needs_pos)
         if bound <= MERGE_COLLECT_MAX:
-            return self._merge_driver(partial, len(compiled), k, offset)
+            self._last_path = "driver_merge"
+            return self._merge_driver(partial, k, offset)
+        self._last_path = "window"
         return self._merge_window(partial, k, offset)
 
     def _runs_local(self, decode_rows: int = 0, result_rows: int = 0,
@@ -1560,30 +1568,23 @@ class SearchEngine:
         tests/test_search_parity.py::test_local_exec_ab_parity."""
         return _score_parts(plan, None, fields, terms, needs_pos)
 
-    # hit sets up to this size materialize doc_meta via a driver-side
-    # pyarrow pruned read (metadata-plane, no Spark job); larger sets go
-    # through the distributed join
-    _META_PYARROW_MAX = 512
-
-    def _merge_driver(self, partial: DataFrame, nq: int, k: int, offset: int) -> DataFrame:
+    def _merge_driver(self, partial: DataFrame, k: int, offset: int) -> DataFrame:
         """Global top-k merge on the driver: ONE Spark job collects the
-        per-partition candidates (≤ parts×limit×queries tiny rows), numpy
-        resolves the global order, and the hit rows materialize their
-        stored fields from a part-pruned doc_meta read — driver-side
-        pyarrow for small hit sets (the doc-store-lookup analog: a
-        metadata-plane fetch, not a cluster job), a broadcast join above
-        the size guard."""
-        # Arrow collect + ONE global lexsort replaces the per-query python
-        # heap loop: (query asc, score desc, ord asc) ordering, then each
-        # query's [offset, offset+k) slice — identical ranks/tie-breaks,
-        # ~10 ms at 80k rows where the Row loop took ~1 s
+        per-partition candidates (≤ parts×limit×queries tiny rows) as one
+        Arrow ``toPandas``; _merge_driver_pdf does the rest."""
         return self._merge_driver_pdf(partial.toPandas(), k, offset)
 
     def _merge_driver_pdf(self, pdf: pd.DataFrame, k: int,
                           offset: int) -> DataFrame:
         """Global top-k merge over a driver-resident partial frame —
         shared by the collected distributed path and the driver-local
-        executor."""
+        executor. ONE lexsort (query asc, score desc, doc_ord asc) ranks
+        every candidate within its query; the rows ranked in
+        (offset, offset+k] are already in (query_id, rank) order. Their
+        stored fields come from a driver-side pyarrow doc-meta read (the
+        doc-store-lookup analog: a metadata-plane fetch, not a cluster
+        job), and the hit table, built column-wise, returns as an Arrow
+        LocalRelation whose ``collect()`` runs no Spark job."""
         if not len(pdf):
             return self._empty_result()
         qa = pdf["query_id"].to_numpy()
@@ -1592,47 +1593,32 @@ class SearchEngine:
         order = np.lexsort((oa, -sa.astype(np.float64), qa))
         qs = qa[order]
         starts = np.flatnonzero(np.r_[True, qs[1:] != qs[:-1]])
-        ends = np.r_[starts[1:], qs.size]
-        hits = []  # (query_id, rank, doc_ord, score) — (query, rank) asc
-        for st, en in zip(starts, ends):
-            sel = order[st + offset:min(en, st + offset + k)]
-            qi = int(qs[st])
-            for rank, i in enumerate(sel, start=1 + offset):
-                hits.append((qi, rank, int(oa[i]), float(sa[i])))
-        if not hits:
+        rank = (np.arange(1, qs.size + 1)
+                - np.repeat(starts, np.diff(np.r_[starts, qs.size])))
+        keep = (rank > offset) & (rank <= offset + k)
+        if not keep.any():
             return self._empty_result()
-        # gate on DISTINCT docs, not hit rows: a 64-query batch's hits
-        # overlap heavily (640 rows ≈ 150 docs), and the pyarrow read cost
-        # scales with docs while the Arrow result handles any row count
-        uniq = {h[2] for h in hits}
-        if len(uniq) <= self._META_PYARROW_MAX:
-            meta = self._doc_meta_pyarrow(uniq)
-            out = [(qid, rank, *meta[ord_], float(np.float32(score)), ord_)
-                   for qid, rank, ord_, score in sorted(hits)]
-            return self._local_hits_df(out)
-        hits_df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(hits, 1),
-            "query_id long, rank int, doc_ord long, score float")
-        parts = sorted({h[2] >> ORD_SHIFT for h in hits})
-        ords_all = [h[2] for h in hits]
-        dm = self._doc_meta_base.filter(
-            F.col("part_id").isin(parts) & F.col("doc_ord").isin(ords_all))
-        return (dm.join(F.broadcast(hits_df), "doc_ord")
-                .select("query_id", "rank", "doc_id", "url", "domain", "title",
-                        "description", "tags",
-                        F.col("score").cast("float").alias("score"),
-                        "doc_ord")
-                .orderBy("query_id", "rank"))
+        sel = order[keep]
+        meta = self._doc_meta_pyarrow(oa[sel])
+        return self._local_hits_df({
+            "query_id": qa[sel], "rank": rank[keep],
+            **dict(zip(meta.column_names, meta.columns)),
+            "score": sa[sel].astype(np.float32), "doc_ord": oa[sel]})
 
-    def _doc_meta_pyarrow(self, ords: set[int]) -> dict[int, tuple]:
-        """doc_ord → (doc_id, url, domain, title, description, tags) via
-        the pruned pyarrow kind=3 read (_doc_meta_read)."""
+    def _doc_meta_pyarrow(self, ords: np.ndarray):
+        """The stored fields (doc_id, url, domain, title, description,
+        tags) of each of ``ords``, row for row, as a pyarrow table: the
+        pruned kind=3 read (_doc_meta_read) of the distinct ords, then
+        one ``take`` keyed by doc_ord (an ord without a doc-meta row gets
+        nulls, as in _merge_window's left join)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         cols = ["doc_id", "url", "domain", "title", "description", "tags"]
-        tbl, doc = self._doc_meta_read(
-            np.fromiter(ords, np.int64, len(ords)),
-            ["part_id", "local_ord", *cols])
-        return dict(zip(doc.tolist(),
-                        zip(*(tbl.column(c).to_pylist() for c in cols))))
+        tbl, doc = self._doc_meta_read(np.unique(ords),
+                                       ["part_id", "local_ord", *cols])
+        at = pc.index_in(pa.array(ords), value_set=pa.array(doc))
+        return tbl.select(cols).take(at)
 
     def _doc_meta_read(self, ords: np.ndarray, cols: list):
         """(pyarrow table of ``cols``, doc_ord array) for the kind=3 rows
@@ -2696,21 +2682,21 @@ class SearchEngine:
             }
         return self._tomb_cache
 
-    def _local_hits_df(self, rows: list[tuple]) -> DataFrame:
-        """Driver-resident hit rows → DataFrame WITHOUT a Spark job: a
-        pyarrow table becomes a Catalyst LocalRelation directly (as in
+    def _local_hits_df(self, cols: dict) -> DataFrame:
+        """Driver-resident hit columns (HIT_COLUMNS → equal-length numpy
+        arrays, pyarrow arrays or lists) → DataFrame WITHOUT a Spark job:
+        a pyarrow table becomes a Catalyst LocalRelation directly (as in
         _doc_meta_local), whatever the Arrow conf, so the caller's
         ``collect()`` launches no job — ``createDataFrame`` from python
         ROWS would parallelize into an RDD and run one just to read back
-        ≤k rows. NUL-safe; pinned by
+        the hits. NUL-safe; pinned by
         tests/test_search_parity.py::test_local_hits_values_roundtrip."""
         import pyarrow as pa
 
         types = [pa.int64(), pa.int32(), *[pa.string()] * 5,
                  pa.list_(pa.int64()), pa.float32(), pa.int64()]
-        return self.spark.createDataFrame(pa.Table.from_pylist(
-            [dict(zip(HIT_COLUMNS, r)) for r in rows],
-            schema=pa.schema(list(zip(HIT_COLUMNS, types)))))
+        return self.spark.createDataFrame(pa.table(
+            cols, schema=pa.schema(list(zip(HIT_COLUMNS, types)))))
 
     def _empty_result(self) -> DataFrame:
         # literal empty relation (LocalRelation — collect() runs no job)

@@ -80,3 +80,20 @@ def test_unmeasurable_marginal_rate_is_none():
 def test_spread_is_min_median_max():
     assert bench.spread([3.0, 1.0, 2.0]) == [1.0, 2.0, 3.0]
     assert bench.spread([5.0]) == [5.0, 5.0, 5.0]
+
+
+def test_kernel_samples_report_a_spread_beside_the_best():
+    lo, hi = bench.leg_levels(4)
+    legs = [_leg(lo, 30.0), _leg(hi, 10.0)]
+    samples = {lo: [2.1e6, 1.8e6, 4.0e6], hi: [9.0e6, 12.0e6, 10.5e6]}
+    s = bench.summarize_legs(legs, {c: max(v) for c, v in samples.items()},
+                             lo, hi, samples)
+    assert s["kernel_tokens_per_sec_spread_1p"] == [1.8e6, 2.1e6, 4.0e6]
+    assert s["kernel_tokens_per_sec_spread_4p"] == [9.0e6, 10.5e6, 12.0e6]
+    # the existing keys keep the best sample
+    assert s["kernel_tokens_per_sec_1p"] == 4.0e6
+    assert s["kernel_tokens_per_sec_4p"] == 12.0e6
+    assert s["kernel_scaling_efficiency_1_to_4"] == 0.75
+    # without samples the summary carries no spread key
+    plain = bench.summarize_legs(legs, {lo: 4.0e6, hi: 12.0e6}, lo, hi)
+    assert not any("kernel_tokens_per_sec_spread" in k for k in plain)

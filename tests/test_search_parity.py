@@ -263,6 +263,12 @@ def test_edge_cases_parity(spark, tmp_path):
                               rtol=1e-5), (q, r["score"], h["score"])
 
 
+def _hit_columns(rows):
+    from spyglass_spark.query.executor import HIT_COLUMNS
+
+    return dict(zip(HIT_COLUMNS, map(list, zip(*rows))))
+
+
 def test_local_hits_values_roundtrip(engine):
     """The Arrow LocalRelation result path must round-trip every string
     bitwise (quotes, backslashes, control chars, unicode, NUL) and
@@ -278,14 +284,16 @@ def test_local_hits_values_roundtrip(engine):
     sc = engine.spark.sparkContext
     sc.setJobGroup("values-rt", "test")
     try:
-        got = [tuple(r) for r in engine._local_hits_df(nasty).collect()]
+        got = [tuple(r) for r in
+               engine._local_hits_df(_hit_columns(nasty)).collect()]
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == nasty
     assert sc.statusTracker().getJobIdsForGroup("values-rt") == []
 
     nul = [(0, 1, "a\x00b", "u", "d", "t", None, [1], 1.0, 9)]
-    assert [tuple(r) for r in engine._local_hits_df(nul).collect()] == nul
+    assert [tuple(r) for r in
+            engine._local_hits_df(_hit_columns(nul)).collect()] == nul
 
     # empty result is a LocalRelation too — schema intact, no job
     empty = engine._empty_result()
@@ -293,6 +301,45 @@ def test_local_hits_values_roundtrip(engine):
     assert [f.name for f in empty.schema.fields] == [
         "query_id", "rank", "doc_id", "url", "domain", "title",
         "description", "tags", "score", "doc_ord"]
+
+
+def test_driver_merge_doc_meta_matches_window(engine, built_index,
+                                              monkeypatch):
+    """A 64-query batch whose hits cover most of the fixture takes the
+    driver merge: its doc-meta comes from the driver-side pyarrow read
+    at any hit count, returns every HIT_COLUMNS field row-for-row equal
+    to the distributed window merge (first page and an offset page), and
+    its collect() runs no Spark job. ``last_meta["path"]`` names the
+    branch each call took."""
+    from spyglass_spark.query import executor as X
+
+    words = sorted({w for d in built_index["docs"]
+                    for w in d["content"].split()})
+    batch = [{"query": f"{words[i % len(words)]} "
+                       f"{words[(i * 7 + 3) % len(words)]}"}
+             for i in range(64)]
+    pages = ((20, 0), (7, 3))
+    merged = [engine.search_many(batch, k=k, offset=o) for k, o in pages]
+    assert engine.last_meta["path"] == "driver_merge"
+    sc = engine.spark.sparkContext
+    sc.setJobGroup("driver-merge-collect", "test")
+    try:
+        got = [df.collect() for df in merged]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("driver-merge-collect") == []
+    assert len({r["doc_ord"] for r in got[0]}) > 100
+    engine.search_many(batch[:2], k=20)
+    assert engine.last_meta["path"] == "local"
+
+    monkeypatch.setattr(X, "MERGE_COLLECT_MAX", 0)
+    for rows, (k, o) in zip(got, pages):
+        window = engine.search_many(batch, k=k, offset=o).collect()
+        assert engine.last_meta["path"] == "window"
+        assert rows[0].__fields__ == window[0].__fields__ == X.HIT_COLUMNS
+        assert [tuple(r) for r in rows] == [tuple(r) for r in window]
+    assert {r["rank"] for r in got[1]} == set(range(4, 11))
+    assert any(r["tags"] for r in got[0])
 
 
 def _tombstoned_copy(spark, built_index, tmp_path):

@@ -141,6 +141,15 @@ section("Segment k-NN → per-doc rank-1 (get_document_distance analog)",
         "  rows; at billion-segment scale the scan slice swaps for the\n"
         "  IVF-indexed candidate stream with the same downstream plan.", 45)
 
+# The match-frame notes from here to the count collector describe the
+# distributed frame, the path above the driver-local gate (the 100 TB
+# path). sf0.001 passes that gate, so pin the distributed path for these
+# captures and restore the gate afterwards.
+from spyglass_spark.query import executor as X
+
+_local_parts = X.LOCAL_EXEC_MAX_PARTS
+X.LOCAL_EXEC_MAX_PARTS = 0
+
 section("Facet counts over the full match set",
         eng.facet_counts("spark merge join"),
         "- Term-pruned posting scan → Arrow-batched decode → distinct\n"
@@ -446,6 +455,8 @@ section("Count collector (full-match-set size, no scoring)",
         "  doc_ord (payload/positions never in ReadSchema) and nothing\n"
         "  is decoded or scored -- the cheapest full-match pass at any\n"
         "  scale. Output is exactly one row.", 50)
+
+X.LOCAL_EXEC_MAX_PARTS = _local_parts
 
 from spyglass_spark.index.fsck import fsck
 
