@@ -28,7 +28,10 @@ number:
     reported as scaling_efficiency_marginal_{lo}_to_{hi};
   - the headline query set runs three times on the same engine:
     ``queries`` is the first pass, ``queries_spread`` the
-    [min, median, max] of each query over the three.
+    [min, median, max] of each query over the three;
+  - right after engine open, FLOOR_JOBS no-op mapInPandas jobs of
+    defaultParallelism tasks give ``python_task_floor_ms``
+    [min, median, max]: the per-task floor of a distributed search.
 At N = 32 the build keys are the historical _8c/_32c names, so the
 BENCH_r0*.json rows stay comparable on a 32-core host.
 
@@ -69,6 +72,7 @@ WORK_DIR = os.environ.get("SPYGLASS_BENCH_DIR",
                           if os.path.isdir("/dev/shm") else "/tmp/spyglass_bench")
 HEADLINE_PASSES = 3
 KERNEL_SAMPLES = 3
+FLOOR_JOBS = 5
 
 
 def _leg_session(cores: int):
@@ -256,6 +260,27 @@ def _kernel_throughput(procs: int) -> float:
     return sum(float(p.communicate()[0]) for p in ps)
 
 
+def python_task_floor(spark, jobs: int = FLOOR_JOBS) -> list:
+    """Wall seconds of each of ``jobs`` no-op mapInPandas jobs of
+    defaultParallelism tasks: the fixed Python-task cost under every
+    distributed search batch."""
+    from spyglass_spark.query.executor import _identity_batches
+
+    n = spark.sparkContext.defaultParallelism
+    secs = []
+    for _ in range(jobs):
+        t0 = time.perf_counter()
+        spark.range(0, n, 1, n).mapInPandas(_identity_batches,
+                                            "id long").count()
+        secs.append(time.perf_counter() - t0)
+    return secs
+
+
+def task_floor_ms(secs) -> list:
+    """python_task_floor_ms: [min, median, max] of the floor jobs, ms."""
+    return [round(v * 1000, 1) for v in spread(secs)]
+
+
 def run_headline_queries(spark, eng, best_of: int = 1) -> dict:
     """The headline query set (names are the BASELINE.md contract). With
     best_of > 1 each query keeps its fastest of N runs — the spot-capture
@@ -328,6 +353,7 @@ def main() -> None:
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
     eng = SearchEngine(spark, index_dir)
+    floor = python_task_floor(spark)
     timings = run_headline_queries(spark, eng)
     passes = [timings] + [run_headline_queries(spark, eng)
                           for _ in range(HEADLINE_PASSES - 1)]
@@ -340,6 +366,7 @@ def main() -> None:
         "queries": timings,
         "queries_spread": {k2: spread([p[k2] for p in passes])
                            for k2 in timings if not k2.startswith("_")},
+        "python_task_floor_ms": task_floor_ms(floor),
         "sf": _sf_of(SF_DIR),
         "index_build": {
             "replicas": REPLICAS,

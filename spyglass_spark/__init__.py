@@ -46,3 +46,51 @@ def __getattr__(name):  # lazy imports keep `import spyglass_spark` light
         mod, attr = targets[name]
         return getattr(import_module(mod), attr)
     raise AttributeError(f"module 'spyglass_spark' has no attribute {name!r}")
+
+
+def _stat_gated(reread):
+    """``zipimporter.invalidate_caches`` that re-reads its archive only
+    when the file changed. PySpark's worker calls
+    ``importlib.invalidate_caches()`` before every task; on CPython 3.11
+    each zipimporter then re-parses its whole central directory
+    (pyspark.zip once per imported subpackage prefix, the py4j zip and
+    the spark-core jar: ~27k entries, ~0.2 s per task on a 4-CPU host).
+    The stamp is ``(st_mtime_ns, st_size)`` as of this importer's last
+    re-read (kept per importer, since importers share archives); a
+    failed stat falls through to ``reread``, the stdlib method."""
+    import os
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size)
+        if getattr(self, "_read_stamp", None) != stamp:
+            reread(self)
+            self._read_stamp = stamp
+
+    invalidate_caches.reread = reread
+    return invalidate_caches
+
+
+def _gate_worker_zip_rereads() -> None:
+    """Install ``_stat_gated`` in a PySpark Python worker, once. CPython
+    3.12 already re-reads lazily, and the driver process is never
+    patched."""
+    import sys
+
+    if sys.version_info >= (3, 12):
+        return
+    tc = sys.modules.get("pyspark.taskcontext")
+    if ("pyspark.worker" not in sys.modules
+            and (tc is None or tc.TaskContext.get() is None)):
+        return
+    import zipimport
+
+    current = zipimport.zipimporter.invalidate_caches
+    if not hasattr(current, "reread"):
+        zipimport.zipimporter.invalidate_caches = _stat_gated(current)
+
+
+_gate_worker_zip_rereads()

@@ -97,3 +97,9 @@ def test_kernel_samples_report_a_spread_beside_the_best():
     # without samples the summary carries no spread key
     plain = bench.summarize_legs(legs, {lo: 4.0e6, hi: 12.0e6}, lo, hi)
     assert not any("kernel_tokens_per_sec_spread" in k for k in plain)
+
+
+def test_python_task_floor_is_a_spread_in_ms():
+    secs = [0.41, 0.172, 0.19, 0.2, 0.1654]
+    assert bench.task_floor_ms(secs) == [165.4, 190.0, 410.0]
+    assert bench.task_floor_ms([0.25]) == [250.0, 250.0, 250.0]
