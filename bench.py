@@ -31,7 +31,12 @@ number:
     [min, median, max] of each query over the three;
   - right after engine open, FLOOR_JOBS no-op mapInPandas jobs of
     defaultParallelism tasks give ``python_task_floor_ms``
-    [min, median, max]: the per-task floor of a distributed search.
+    [min, median, max]: the per-task floor of a distributed search;
+  - the four aggregation kinds of perfbench's bulk workload run AGG_PASSES
+    times per query of AGG_QUERIES, whose match sets fall under and above
+    the driver-local match-frame gate: ``agg_ms`` is each call's
+    [min, median, max] ms (frame build plus collect), ``agg_spark_jobs``
+    its median Spark job count.
 At N = 32 the build keys are the historical _8c/_32c names, so the
 BENCH_r0*.json rows stay comparable on a 32-core host.
 
@@ -73,6 +78,13 @@ WORK_DIR = os.environ.get("SPYGLASS_BENCH_DIR",
 HEADLINE_PASSES = 3
 KERNEL_SAMPLES = 3
 FLOOR_JOBS = 5
+AGG_PASSES = 3
+# "dup" is in 5 % of the base documents, so its match set stays under
+# MERGE_COLLECT_MAX and the frame is built on the driver; "join" is in
+# 77 %, over that bound at the default REPLICAS, so its frame is distributed
+AGG_QUERIES = ("dup", "join")
+AGG_CALLS = {"count_matches": {}, "facet_counts": {},
+             "terms_agg": {"facet_col": "domain"}, "date_histogram": {}}
 
 
 def _leg_session(cores: int):
@@ -281,6 +293,40 @@ def task_floor_ms(secs) -> list:
     return [round(v * 1000, 1) for v in spread(secs)]
 
 
+def run_agg_pass(spark, eng, n: int) -> dict:
+    """Pass ``n`` of AGG_CALLS over every query of AGG_QUERIES:
+    {query: {kind: (ms, Spark jobs)}}, the ms covering the frame build
+    and the collect, the jobs counted with a job group of its own."""
+    sc = spark.sparkContext
+    out: dict = {}
+    for q in AGG_QUERIES:
+        for kind, params in AGG_CALLS.items():
+            group = f"bench-agg{n}-{q}-{kind}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            try:
+                getattr(eng, kind)(q, **params).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            ms = (time.perf_counter() - t0) * 1000
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            out.setdefault(q, {})[kind] = (ms, jobs)
+    return out
+
+
+def summarize_aggs(passes: list[dict]) -> dict:
+    """``agg_ms``: {query: {kind: [min, median, max] ms}} and
+    ``agg_spark_jobs``: {query: {kind: median jobs}} over the passes of
+    run_agg_pass."""
+    cells = passes[0]
+    return {"agg_ms": {q: {k: [round(v, 1) for v in
+                               spread([p[q][k][0] for p in passes])]
+                           for k in cells[q]} for q in cells},
+            "agg_spark_jobs": {q: {k: statistics.median(p[q][k][1]
+                                                        for p in passes)
+                                   for k in cells[q]} for q in cells}}
+
+
 def run_headline_queries(spark, eng, best_of: int = 1) -> dict:
     """The headline query set (names are the BASELINE.md contract). With
     best_of > 1 each query keeps its fastest of N runs — the spot-capture
@@ -357,6 +403,8 @@ def main() -> None:
     timings = run_headline_queries(spark, eng)
     passes = [timings] + [run_headline_queries(spark, eng)
                           for _ in range(HEADLINE_PASSES - 1)]
+    agg = summarize_aggs([run_agg_pass(spark, eng, n)
+                          for n in range(AGG_PASSES)])
     total = round(sum(v for k2, v in timings.items()
                       if not k2.startswith("_")), 3)
     result = {
@@ -367,6 +415,7 @@ def main() -> None:
         "queries_spread": {k2: spread([p[k2] for p in passes])
                            for k2 in timings if not k2.startswith("_")},
         "python_task_floor_ms": task_floor_ms(floor),
+        **agg,
         "sf": _sf_of(SF_DIR),
         "index_build": {
             "replicas": REPLICAS,

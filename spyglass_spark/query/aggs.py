@@ -283,9 +283,9 @@ def terms_agg(dm: DataFrame, facet_col: str = "tags",
 
     Scale shape: ONE partial→final hash agg over the exploded
     pairs (identical to facet_counts), then every later step —
-    top-size limit, the two 1-row totals, the broadcast-join
-    projection — runs on O(#distinct values) rows. No second pass
-    over the match set, no driver materialization."""
+    top-size limit, the 1-row total, the broadcast-join projection,
+    the kept-sum window — runs on O(#distinct values) rows. No second
+    pass over the match set, no driver materialization."""
     if size <= 0:
         raise ValueError("size must be positive")
     counts = (dm.select(_values(dm, facet_col).alias("tag_id"))
@@ -296,20 +296,19 @@ def terms_agg(dm: DataFrame, facet_col: str = "tags",
 def _top_buckets(counts: DataFrame, keys: list, size: int) -> DataFrame:
     """Top ``size`` rows of a (keys..., doc_count) frame by doc_count
     desc then keys asc, plus the constant ``sum_other_doc_count``:
-    the doc_count total of the rows left out. The limit, the two 1-row
-    totals and the broadcast projection run on O(#buckets) rows."""
+    the doc_count total of the rows left out. One 1-row total is
+    broadcast to the top rows; the kept total is a window sum over
+    those ≤ ``size`` rows, whose limit output is already one
+    partition, so the window plans no exchange."""
     order = [F.desc("doc_count")] + [F.asc(k) for k in keys]
     top = counts.orderBy(*order).limit(int(size))
     total = counts.agg(
         F.coalesce(F.sum("doc_count"), F.lit(0).cast("long"))
          .alias("_total"))
-    kept = top.agg(
-        F.coalesce(F.sum("doc_count"), F.lit(0).cast("long"))
-         .alias("_kept"))
+    kept = F.sum("doc_count").over(Window.partitionBy())
     return (top.crossJoin(F.broadcast(total))
-               .crossJoin(F.broadcast(kept))
                .select(*keys, "doc_count",
-                       (F.col("_total") - F.col("_kept"))
+                       (F.col("_total") - kept)
                        .alias("sum_other_doc_count"))
                .orderBy(*order))
 

@@ -2270,7 +2270,13 @@ class SearchEngine:
         date-range Musts applied (NULL never matches), as an Arrow
         LocalRelation with the distributed frame's schema (doc_ord, then
         ``_doc_meta_base``'s columns), in doc_ord order — the match frame
-        without a Spark job."""
+        without a Spark job. The relation is coalesced to one partition
+        (no shuffle): ``CoalesceExec(1)`` reports ``SinglePartition``,
+        which satisfies every distribution an aggregation asks for, so
+        no aggregation over this frame plans an Exchange and each runs
+        as one single-task stage. Only this frame, bounded by the
+        ``_runs_local`` gate and already driver-resident, is coalesced;
+        the distributed frame never is."""
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql.types import StructType
@@ -2291,7 +2297,8 @@ class SearchEngine:
         tbl = tbl.take(order).add_column(0, "doc_ord",
                                          pa.array(doc[order], pa.int64()))
         return self.spark.createDataFrame(tbl, StructType(
-            [base.schema["doc_ord"]] + [base.schema[c] for c in cols]))
+            [base.schema["doc_ord"]] + [base.schema[c] for c in cols])
+        ).coalesce(1)
 
     def significant_terms(self, query: str, filters=(), boosts=(),
                           field: str = "content", size: int = 10,

@@ -103,3 +103,20 @@ def test_python_task_floor_is_a_spread_in_ms():
     secs = [0.41, 0.172, 0.19, 0.2, 0.1654]
     assert bench.task_floor_ms(secs) == [165.4, 190.0, 410.0]
     assert bench.task_floor_ms([0.25]) == [250.0, 250.0, 250.0]
+
+
+def test_agg_summary_is_a_spread_and_median_jobs_per_query_and_kind():
+    passes = [{"dup": {"count_matches": (70.04, 1), "terms_agg": (210.0, 2)},
+               "join": {"count_matches": (900.0, 4)}},
+              {"dup": {"count_matches": (64.0, 1), "terms_agg": (190.0, 2)},
+               "join": {"count_matches": (800.0, 4)}},
+              {"dup": {"count_matches": (99.96, 1), "terms_agg": (200.0, 3)},
+               "join": {"count_matches": (850.0, 5)}}]
+    s = bench.summarize_aggs(passes)
+    assert s["agg_ms"] == {
+        "dup": {"count_matches": [64.0, 70.0, 100.0],
+                "terms_agg": [190.0, 200.0, 210.0]},
+        "join": {"count_matches": [800.0, 850.0, 900.0]}}
+    assert s["agg_spark_jobs"] == {"dup": {"count_matches": 1,
+                                           "terms_agg": 2},
+                                   "join": {"count_matches": 4}}

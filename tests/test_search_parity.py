@@ -438,12 +438,61 @@ def _agg_ab_queries(docs):
             "zzzznohit"]
 
 
-def _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries):
+def _agg_ab_tree(docs):
+    """One ``aggregate()`` request holding every ``aggs.AGGS`` kind,
+    each with the parameters its own tests use."""
+    dates = sorted(d["lastmodified"] for d in docs
+                   if d.get("lastmodified") is not None)
+    lo, hi = dates[0], dates[-1]
+    mid = (lo + hi) // 2
+    dom = docs[0]["domain"]
+    cut = 1672531200000000
+    week = 7 * 86_400_000_000
+    return {
+        "facets": {}, "date_histogram": {},
+        "histogram": {"interval": week, "offset": 3 * 86_400_000_000},
+        "histogram_stats": {"interval": week},
+        "stats": {}, "percentiles": {"percents": (25.0, 50.0, 95.0)},
+        "percentile_ranks": {"values": (float(lo), float(mid),
+                                        hi + 10)},
+        "facet_stats": {},
+        "range": {"ranges": (("below_mid", None, mid),
+                             ("overlap_all", lo, hi + 1),
+                             ("upper", mid, None))},
+        "cardinality": {"col": "domain"},
+        "extended_stats": {"shift": lo},
+        "top_hits": {"k_hits": 2},
+        "terms": {"facet_col": "domain"}, "count": {},
+        "significant_terms": {"size": 5, "min_doc_count": 2},
+        "filters": {"specs": {"d0": [("domain", "eq", dom)],
+                              "old": [("lastmodified", "lt", cut)]},
+                    "other_bucket": True},
+        "rare_terms": {"facet_col": "domain", "max_doc_count": 3},
+        "composite": {"sources": ({"name": "dom", "col": "domain"},
+                                  {"name": "week", "col": "lastmodified",
+                                   "kind": "date_histogram",
+                                   "interval": week}),
+                      "size": 3},
+        "missing": {"col": "description"}, "value_count": {"col": "tags"},
+        "weighted_avg": {}, "median_absolute_deviation": {},
+        "boxplot": {},
+        "multi_terms": {"facet_cols": ("domain", "tags"), "size": 4},
+        "adjacency_matrix": {"specs": {"d0": [("domain", "eq", dom)],
+                                       "old": [("lastmodified", "lt",
+                                                cut)]}},
+        "auto_date_histogram": {"target_buckets": 7},
+        "string_stats": {"col": "title"},
+    }
+
+
+def _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries,
+                 tree=None):
     """Under LOCAL_EXEC_MAX_PARTS = ``max_parts`` (0 pins the
     distributed path): the match frame of every query in
-    ``queries`` (all its columns, in doc_ord order), and count_matches,
+    ``queries`` (all its columns, in doc_ord order), count_matches,
     facet_counts, terms_agg(domain) and date_histogram of every query
-    in ``agg_queries`` (rows order-normalized)."""
+    in ``agg_queries``, and the rows of every kind of the ``aggregate()``
+    request ``tree`` over ``"fn"`` (rows order-normalized)."""
     monkeypatch.setattr(X, "LOCAL_EXEC_MAX_PARTS", max_parts)
     frames = [sorted(eng._match_frame(q, (), (), "ab").collect(),
                      key=lambda r: r["doc_ord"]) for q in queries]
@@ -452,6 +501,11 @@ def _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries):
              sorted(eng.terms_agg(q, facet_col="domain").collect(), key=repr),
              sorted(eng.date_histogram(q).collect(), key=repr))
             for q in agg_queries]
+    if tree:
+        out = eng.aggregate("fn", aggs={k: dict(spec, kind=k)
+                                        for k, spec in tree.items()})
+        aggs.append({k: sorted(df.collect(), key=repr)
+                     for k, df in out.items()})
     return frames, aggs
 
 
@@ -467,31 +521,54 @@ def test_agg_local_exec_ab_parity(spark, built_index, tmp_path,
     the distributed frame must give identical rows — the gate is a
     scale/latency choice only. Covered on the fixture index and on a
     two-generation copy carrying both tombstone sources (upsert /
-    delete_by_urls side tables, delete_by_ids manifest doc_ids). The
-    local frame launches no Spark job on a fresh index; a match-set
-    bound or decode volume over its cap and an unshippable tombstone
-    set take the distributed path."""
+    delete_by_urls side tables, delete_by_ids manifest doc_ids), for
+    count_matches / facet_counts / terms_agg / date_histogram on several
+    match-set shapes and for every ``aggs.AGGS`` kind on ``"fn"``. The
+    local frame launches no Spark job on a fresh index, and the
+    aggregations over it collect in 1 job each (terms_agg in 2); a
+    match-set bound or decode volume over its cap and an unshippable
+    tombstone set take the distributed path."""
+    from spyglass_spark.query import aggs
     from spyglass_spark.query import executor as X
 
     queries = _agg_ab_queries(built_index["docs"])
     max_parts = X.LOCAL_EXEC_MAX_PARTS
     eng = X.SearchEngine(spark, built_index["index_dir"])
     sc = spark.sparkContext
-    sc.setJobGroup("agg-local-frame", "driver-local match frame")
-    try:
-        frame = eng._match_frame("fn", (), (), "ab")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("agg-local-frame") == []
+
+    def jobs(label, fn):
+        sc.setJobGroup(label, label)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(label))
+
+    frame, n = jobs("agg-local-frame", lambda: eng._match_frame(
+        "fn", (), (), "ab"))
+    assert n == 0
     assert _frame_is_local(frame)
+    # the one-partition local frame plans no Exchange: each kind collects
+    # in one single-stage job; terms_agg adds its broadcast 1-row total
+    for label, df, want in (
+            ("count", eng.count_matches("fn"), 1),
+            ("facets", eng.facet_counts("fn"), 1),
+            ("date", eng.date_histogram("fn"), 1),
+            ("terms", eng.terms_agg("fn", facet_col="domain"), 2)):
+        assert jobs(f"agg-local-{label}", df.collect)[1] == want, label
 
     agg_queries = ["fn", {"parsed": "fn -main"}]
-    local = _agg_ab_rows(X, eng, monkeypatch, max_parts, queries, agg_queries)
-    dist = _agg_ab_rows(X, eng, monkeypatch, 0, queries, agg_queries)
+    tree = _agg_ab_tree(built_index["docs"])
+    assert set(tree) == set(aggs.AGGS)
+    local = _agg_ab_rows(X, eng, monkeypatch, max_parts, queries,
+                         agg_queries, tree)
+    dist = _agg_ab_rows(X, eng, monkeypatch, 0, queries, agg_queries, tree)
     assert local == dist
-    frames, aggs = local
+    frames, rows = local
     assert all(frames[:-1]) and frames[-1] == []  # last: empty match set
-    assert all(a[0][0]["n"] > 0 and a[1] and a[2] and a[3] for a in aggs)
+    assert all(a[0][0]["n"] > 0 and a[1] and a[2] and a[3]
+               for a in rows[:-1])
+    assert all(rows[-1].values())
 
     # over a cap → distributed
     monkeypatch.undo()

@@ -141,6 +141,16 @@ section("Segment k-NN → per-doc rank-1 (get_document_distance analog)",
         "  rows; at billion-segment scale the scan slice swaps for the\n"
         "  IVF-indexed candidate stream with the same downstream plan.", 45)
 
+section("Facet counts over a driver-local match frame",
+        eng.facet_counts("spark merge join"),
+        "- Below the driver-local gate the match frame is built on the\n"
+        "  driver and crosses to the JVM as one Arrow LocalRelation,\n"
+        "  coalesced to ONE partition (no shuffle). Coalesce 1 reports\n"
+        "  SinglePartition, which satisfies the groupBy's clustered and\n"
+        "  the orderBy's ordered distribution, so the plan has NO\n"
+        "  Exchange: the partial and final aggregates and the sort run\n"
+        "  in one single-task stage, one Spark job per collect.", 30)
+
 # The match-frame notes from here to the count collector describe the
 # distributed frame, the path above the driver-local gate (the 100 TB
 # path). sf0.001 passes that gate, so pin the distributed path for these
@@ -262,10 +272,13 @@ section("Gap-filled date histogram (min_doc_count=0, tantivy's default)",
 section("Terms aggregation (size + sum_other_doc_count)",
         eng.terms_agg("spark merge join", size=5),
         "- facet_counts' single partial->final hash agg over the\n"
-        "  exploded (doc,tag) pairs, then top-size limit, two 1-row\n"
-        "  totals and broadcast crossJoins -- everything after the agg\n"
-        "  runs on O(#distinct tags) rows. The ES-contract other-count\n"
-        "  costs no second match-set pass.", 50)
+        "  exploded (doc,tag) pairs, then the top-size limit, ONE 1-row\n"
+        "  total over all buckets and ONE broadcast crossJoin of it onto\n"
+        "  the top rows; the kept sum is a window over those <= size\n"
+        "  rows, whose limit output is already one partition, so the\n"
+        "  window plans no exchange. Everything after the agg runs on\n"
+        "  O(#distinct tags) rows; the ES-contract other-count costs no\n"
+        "  second match-set pass.", 50)
 
 section("Generic histogram with the full knob set (offset + bounds)",
         eng.histogram("spark merge join", interval=7 * 86_400_000_000,
